@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark surface (driver contract): times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE short JSON line.
@@ -52,53 +51,9 @@ object Bench {
     "x8_triangle_counts",        // degree-oriented exact triangles
     "x3_train_classifier")       // in-engine GD training loop
 
-  /** The measurement-heavy tail (recall evals carrying brute-force exact
-    * references, iterative graph/training evals): ~20 % of the board's
-    * time in ~4 % of its queries. `SPARK_GRAFT_BENCH_TIER=core` skips
-    * them, `eval` runs only them; default (unset/`all`) is the full
-    * board — byte-identical behavior to rounds ≤ 14. The split exists so
-    * a tightened time budget can keep per-operator signal without paying
-    * the eval tail every sweep (SCALING.md round-15 design note). */
-  private val evalTier = Set(
-    "x2_ann_recall", "x2_ivf_recall", "x2_pq_recall", "x2_pq_recall_fixedk",
-    "x2_ivf_pq_recall",
-    "x2_ivf_rerank_recall", "x2_matryoshka_recall", "x2_opq_recall",
-    "x2_opq_alloc_recall", "x2_opq_refine_recall", "x8_hits_states",
-    "x8_pagerank_states", "x8_personalized_pagerank", "x3_train_classifier",
-    "x3_classifier_scores")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val tier = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIER", "all")
-    val inTier: String => Boolean = tier match {
-      case "core" => name => !evalTier(name)
-      case "eval" => evalTier
-      case _      => _ => true
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is a nanosecond parquet timestamp → read as epoch-nanos long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r21: let AQE re-plan the output partitioning of cached plans.
-      // The engine caches bounded/derived frames (dedup signatures, graph
-      // edge/node tables, eval rotations); with the default `false` every
-      // cached frame pins the static shuffle.partitions count, so each of
-      // an iterative query's ~dozens of stages reads N tiny cached
-      // partitions (x8_hits: 95 stages × ~20 tasks at sf0.1). With AQE
-      // allowed to size them from runtime bytes the partitioning stays
-      // scale-adaptive at every SF (64 MB advisory target at 100 TB, one
-      // task at sf0.1). Measured interleaved A/B (ConfAb, min-of-3):
-      // x8_hits 6.33→2.67 s, x8_pagerank 5.32→3.03 s, x3_classifier_scores
-      // 7.19→2.98 s, no regressions (quantile family flat). Results are
-      // partition-count-invariant by the engine's determinism discipline
-      // (the driver already benches at several core counts).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     // Warmup: JIT/codegen + file-index the inputs once so the first timed
     // query doesn't absorb ~10s of JVM startup (measured; see BENCH notes).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
@@ -106,32 +61,11 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     def onePass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.filter(q => inTier(q._1))
-        .sortBy(_._1).map { case (name, fn) =>
-        // Cache cleared before EVERY query (round 8): each timing is the
-        // query's self-contained full cost. Previously only passes were
-        // isolated, so queries sharing session-lifetime operator caches
-        // (the x1 dedup family's shingle/signature frames) timed as
-        // increments over whichever alphabetical neighbor ran first —
-        // x1_dedup_pipeline measured 1.3 s with warm sibling caches and
-        // 2.2 s without, flipping round over round on cache luck (the
-        // r6→r7→r8 ±10-60% "drift" was exactly this). Within-query reuse
-        // — the part that is a real operator property — still counts.
-        spark.sharedState.cacheManager.clearCache()
-        // ALSO release RDD-level persistence (round 18): localCheckpoint
-        // blocks (the quantile family's reuse discipline, PageRank's
-        // per-step cuts) are NOT cacheManager entries — they linger until
-        // driver GC lets ContextCleaner run, so a long board accumulates
-        // dead MEMORY_AND_DISK blocks from every finished query.
-        // Explicitly unpersisting restores per-query storage isolation
-        // (the r8 clearCache rationale, applied to the storage layer).
-        // Measured effect on the r18 sf3.0 board: ≈0 (1341 → 1358 s run
-        // to run) — at 32 GiB heap the leak wasn't yet evicting live
-        // state — but the failure mode is heap-relative, so the guard is
-        // kept as bench semantics rather than rediscovered at the scale
-        // where it bites.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        // Every query starts isolated (Engine.isolate): each timing is the
+        // query's self-contained full cost; within-query reuse — the part
+        // that is a real operator property — still counts.
+        Engine.isolate(spark)
         val t0 = System.nanoTime()
         // A crashing query must not vanish into a fast-looking timing:
         // record it in `failed`, surfaced in the output JSON.
@@ -160,7 +94,7 @@ object Bench {
       n
     }
     val passes = (1 to nPasses).map(_ => onePass().toMap)
-    val results = SparkEntry.queries.keys.toSeq.filter(inTier).sorted
+    val results = SparkEntry.queries.keys.toSeq.sorted
       .map(k => k -> passes.map(_(k)).min)
     // Locale.ROOT: the f-interpolator uses the default locale, which
     // renders a comma decimal separator on e.g. de_DE JVMs → broken JSON
@@ -207,7 +141,7 @@ object Bench {
         .format(new java.util.Date())
       val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
       val ap = java.nio.file.Paths.get(
-        s"bench_archive/bench_full_${ts}_${sfBase}_$tier.json")
+        s"bench_archive/bench_full_${ts}_${sfBase}.json")
       java.nio.file.Files.createDirectories(ap.getParent)
       java.nio.file.Files.write(ap, fullJson.getBytes)
     } catch { case _: Throwable => () }

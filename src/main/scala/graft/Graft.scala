@@ -11,7 +11,7 @@ import graft.streaming.StreamingOps
   * would call. Everything returns a lazy DataFrame; nothing collects.
   *
   * {{{
-  * val spark = Graft.session("local[8]")
+  * val spark = Graft.session(cores = 8)
   * val t = Graft.transitions(spark, dir)                       // S1 ingest
   * val ret = Graft.discountedReturns(t, gamma = 0.99)          // W1
   * val best = Graft.feasibleBest(eps, limit = 20.0)            // W4
@@ -21,19 +21,10 @@ import graft.streaming.StreamingOps
   */
 object Graft {
 
-  /** Session with the engine's settings (nanos timestamps, AQE, UTC,
-    * custom functions registered). */
-  def session(master: String = "local[*]",
-              shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** Session with the engine profile (`Engine.conf`) at `cores` local
+    * cores, custom functions registered. */
+  def session(cores: Int = Engine.cpus): SparkSession = {
+    val s = Engine.builder(cores).appName("graft").getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s
   }

@@ -341,7 +341,7 @@ private[graft] trait QueriesEval extends QueriesPipelines {
       // half's O(N·cells) assignment FLOPs by the pad width — measured
       // at-best-tied with the unfused chain at sf1 while this spec
       // slicing won every interleaved pair, REJECTED; see
-      // OpqFuseAb/SCALING.md r22). Instead
+      // SCALING.md r22). Instead
       // ONE 72-dim frame [raw 64 | rot 8] is sliced by an explicit
       // per-subspace (sub, offset, width) spec: subs 0-7 are the plain
       // variant's width-8 slices, subs 8-15 the rotated variant's

@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -606,128 +608,62 @@ object NormRewrite extends org.apache.spark.sql.catalyst.rules.Rule[
     }
 }
 
-/** Session registration for the custom expressions — callable from SQL and
-  * `expr(...)` once registered; idempotent per session. */
+/** The engine's `graft_*` SQL functions, callable from SQL and `expr(...)`
+  * once installed. Both install paths — `register` on a live session and
+  * the `GraftExtensions` hook at session build — read the one `table`, so
+  * they install the same functions and the same optimizer rule. */
 object GraftFunctions {
+  /** One SQL function: name, implementing expression class, builder. */
+  final case class Fn(name: String, cls: Class[_], build: Seq[Expression] => Expression)
+
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
+  private def longArg(e: Expression): Long = e.eval().asInstanceOf[Number].longValue()
+
+  val table: Seq[Fn] = Seq(
+    Fn("graft_dot", classOf[DotProductD], e => DotProductD(e(0), e(1))),
+    Fn("graft_norm2", classOf[SquaredNormD], e => SquaredNormD(e(0))),
+    // density contract (r16): element validation + containsNull=false,
+    // under an array-level AssertNotNull; graft_nn = the scalar form
+    Fn("graft_dense", classOf[DenseElements], e => AssertNotNull(DenseElements(e(0)))),
+    Fn("graft_nn", classOf[AssertNotNull], e => AssertNotNull(e(0))),
+    Fn("graft_tokens", classOf[TokenizeWords], e => TokenizeWords(e(0))),
+    Fn("graft_shingles", classOf[WordShingles], e => WordShingles(e(0), intArg(e(1)))),
+    Fn("graft_text_stats", classOf[TextStatsExpr], e => TextStatsExpr(e(0))),
+    Fn("graft_sign_lsh", classOf[SignLshBucket], e => SignLshBucket(e(0), intArg(e(1)))),
+    Fn("graft_nfc", classOf[NfcNormalize], e => NfcNormalize(e(0))),
+    Fn("graft_strip_accents", classOf[StripAccents], e => StripAccents(e(0))),
+    Fn("graft_cdc_cuts", classOf[CdcCuts],
+      e => CdcCuts(e(0), intArg(e(1)), longArg(e(2)), longArg(e(3)))),
+    Fn("graft_nearest_cell", classOf[NearestCell], e => NearestCell(e(0), e(1))),
+    Fn("graft_max_cosine", classOf[MaxCosine], e => MaxCosine(e(0), e(1))))
+
+  /** Installs `table` and `NormRewrite` into `spark`; idempotent. Repeated
+    * calls (one per operator invocation) skip the re-register, which would
+    * otherwise warn "replaced a previously registered function" on every
+    * query. Every name is checked, so a session holding an older, shorter
+    * table still gets the newer functions. */
   def register(spark: SparkSession): Unit = {
-    // All functions register together, so one existence probe suffices.
-    // Skipping the re-register keeps repeated calls (one per operator
-    // invocation) from spamming "replaced a previously registered function"
-    // warnings on every query. The probe MUST target the NEWEST function:
-    // probing an older one would skip registration for a session that
-    // registered an earlier surface and leave the new functions
-    // unresolved (exactly the graft_nfc regression this line fixed).
-    val already = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dense"))
-    if (!already) registerAll(spark)
+    val registry = spark.sessionState.functionRegistry
+    if (!table.forall(f => registry.functionExists(FunctionIdentifier(f.name))))
+      table.foreach(f => registry.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
     if (!spark.experimental.extraOptimizations.contains(NormRewrite)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ NormRewrite
     }
   }
-
-  private def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductD(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_norm2", exprs => SquaredNormD(exprs(0)), "scala_udf")
-    // density contract (r16): element validation + containsNull=false,
-    // under an array-level AssertNotNull; graft_nn = the scalar form
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dense", exprs =>
-        org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
-          DenseElements(exprs(0))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nn", exprs =>
-        org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
-          exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens", exprs => TokenizeWords(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => WordShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_text_stats", exprs => TextStatsExpr(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_lsh", exprs => SignLshBucket(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_strip_accents", exprs => StripAccents(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_cuts", exprs => CdcCuts(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Number].longValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue()), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cell", exprs => NearestCell(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_max_cosine", exprs => MaxCosine(exprs(0), exprs(1)), "scala_udf")
-  }
 }
 
 /** `SparkSessionExtensions` hook — the deployment-grade registration path:
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) injects the engine's functions
-  * into every session at build time, the place where injected rules /
-  * planner strategies would also live. */
+  * `.withExtensions(new GraftExtensions)`) injects `GraftFunctions.table`
+  * and `NormRewrite` into every session at build time, the place where
+  * injected rules / planner strategies would also live. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // the full engine surface — identical to GraftFunctions.register, so
-    // both registration paths produce the same functions AND the same
-    // optimizer (ADVICE r1: this path used to install graft_dot only)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductD].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProductD(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_norm2"),
-      new ExpressionInfo(classOf[SquaredNormD].getName, "graft_norm2"),
-      (exprs: Seq[Expression]) => SquaredNormD(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_tokens"),
-      new ExpressionInfo(classOf[TokenizeWords].getName, "graft_tokens"),
-      (exprs: Seq[Expression]) => TokenizeWords(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_text_stats"),
-      new ExpressionInfo(classOf[TextStatsExpr].getName, "graft_text_stats"),
-      (exprs: Seq[Expression]) => TextStatsExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sign_lsh"),
-      new ExpressionInfo(classOf[SignLshBucket].getName, "graft_sign_lsh"),
-      (exprs: Seq[Expression]) => SignLshBucket(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getName, "graft_strip_accents"),
-      (exprs: Seq[Expression]) => StripAccents(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cdc_cuts"),
-      new ExpressionInfo(classOf[CdcCuts].getName, "graft_cdc_cuts"),
-      (exprs: Seq[Expression]) => CdcCuts(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Number].longValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue())))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_cell"),
-      new ExpressionInfo(classOf[NearestCell].getName, "graft_nearest_cell"),
-      (exprs: Seq[Expression]) => NearestCell(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_max_cosine"),
-      new ExpressionInfo(classOf[MaxCosine].getName, "graft_max_cosine"),
-      (exprs: Seq[Expression]) => MaxCosine(exprs(0), exprs(1))))
+    GraftFunctions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
     ext.injectOptimizerRule(_ => NormRewrite)
   }
 }

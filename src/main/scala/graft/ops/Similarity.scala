@@ -796,8 +796,8 @@ object Similarity {
     * training means are means of zeros (0 on the lattice, preserved
     * across Lloyd iterations) — but was MEASURED and REJECTED: padding
     * multiplies the rotated half's O(N·cells) assignment FLOPs by the
-    * pad width (cells grows ∝ N on this uncapped-seed family), and the
-    * `OpqFuseAb` interleaved A/B/C found it at best tied with the old
+    * pad width (cells grows ∝ N on this uncapped-seed family), and an
+    * interleaved A/B/C found it at best tied with the old
     * two-chain shape at sf1 while the spec-sliced fusion beat both at
     * every SF (SCALING.md r22). */
   private[graft] def pcaRotateConcatPadded(emb: DataFrame, idCol: String,

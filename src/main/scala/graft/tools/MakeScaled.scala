@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
@@ -66,13 +66,7 @@ object MakeScaled {
     val span = args.lift(3).map(_.toLong).getOrElse(33600000L)
     val dupRate = args.lift(4).map(_.toDouble).getOrElse(1.0)
     require(dupRate >= 0.0 && dupRate <= 1.0, s"dupRate $dupRate outside [0,1]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session()
     keyCols.foreach { case (table, keys) =>
       val src = spark.read.parquet(s"$srcDir/$table.parquet")
       // int32 key columns: the largest shift must leave half the int

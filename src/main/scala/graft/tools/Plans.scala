@@ -1,19 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump formatted physical plans for selected queries to spot
   * missing pushdown/pruning/broadcast before they cost anything at scale. */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Engine.session()
     // r22: overridable — gated operators (exactQuantiles' lazy levels)
     // produce DIFFERENT plan shapes per data scale; the quantile-family
     // plan dumps need the sf0.1 bucket-path shape, not just sf0.001's

@@ -1,0 +1,93 @@
+package graft.tools
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftPlanBridge
+
+import graft.{Engine, SparkEntry}
+
+/** Times named queries the way Bench does and splits each one's wall time
+  * into Spark job time and driver time.
+  *
+  * Each query runs three times through the noop sink, each run after
+  * `Engine.isolate`. The fastest run is reported with its job and task
+  * counts, its job time — the union of its job intervals, so concurrent
+  * jobs (broadcasts, subqueries) count once — and its driver gap, wall
+  * minus job time: analysis, planning and driver work between jobs. A
+  * failing query prints its exception class and message instead.
+  *
+  * Usage: tools/run_main.sh graft.tools.Probe <sfDir> <query> [query...]
+  */
+object Probe {
+  /** One run; times in seconds. */
+  final case class Run(wall: Double, jobs: Int, tasks: Int, jobTime: Double) {
+    def gap: Double = wall - jobTime
+  }
+
+  /** Total length of the union of `intervals` clipped to `[t0, t1]`. */
+  def unionLength(intervals: Seq[(Long, Long)], t0: Long, t1: Long): Long =
+    intervals.map { case (s, e) => (math.max(s, t0), math.min(e, t1)) }
+      .filter { case (s, e) => e > s }
+      .sortBy(_._1)
+      .foldLeft(List.empty[(Long, Long)]) {
+        case ((s0, e0) :: done, (s, e)) if s <= e0 => (s0, math.max(e0, e)) :: done
+        case (done, iv) => iv :: done
+      }
+      .map { case (s, e) => e - s }.sum
+
+  /** Job intervals (scheduler epoch-ms stamps) and task count of whatever
+    * ran since the last `reset`. */
+  final class Jobs extends SparkListener {
+    private val starts = mutable.Map.empty[Int, Long]
+    private val intervals = mutable.ArrayBuffer.empty[(Long, Long)]
+    private var tasks = 0
+
+    def reset(): Unit = synchronized { starts.clear(); intervals.clear(); tasks = 0 }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      starts(e.jobId) = e.time
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      starts.remove(e.jobId).foreach(s => intervals += (s -> e.time))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized { tasks += 1 }
+
+    /** The run that spanned epoch ms `[t0, t1]`. */
+    def run(t0: Long, t1: Long): Run = synchronized {
+      Run((t1 - t0) / 1e3, intervals.size, tasks, unionLength(intervals.toSeq, t0, t1) / 1e3)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args.head
+    val spark = Engine.session()
+    val sc = spark.sparkContext
+    // Bench's warm-up: JIT/codegen and the input file index before timing
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    // a query probed alone must not rely on an earlier one registering them
+    graft.functions.GraftFunctions.register(spark)
+    val jobs = new Jobs
+    sc.addSparkListener(jobs)
+    println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%5s ${"tasks"}%6s ${"job_s"}%8s ${"gap_s"}%8s")
+    args.tail.foreach { name =>
+      try {
+        val query = SparkEntry.queries(name)
+        val best = (1 to 3).map { _ =>
+          Engine.isolate(spark)
+          GraftPlanBridge.drainListeners(sc)
+          jobs.reset()
+          val t0 = System.currentTimeMillis()
+          query(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val t1 = System.currentTimeMillis()
+          GraftPlanBridge.drainListeners(sc)
+          jobs.run(t0, t1)
+        }.minBy(_.wall)
+        println(f"$name%-32s ${best.wall}%8.3f ${best.jobs}%5d ${best.tasks}%6d " +
+          f"${best.jobTime}%8.3f ${best.gap}%8.3f")
+      } catch { case e: Throwable =>
+        println(s"$name FAILED ${e.getClass.getName}: ${e.getMessage}")
+      }
+    }
+    spark.stop()
+  }
+}

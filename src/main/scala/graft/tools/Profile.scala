@@ -8,7 +8,9 @@ import graft.sources.Tables
 /** Dev-only arg-driven profiler (consolidates the round 3-5 one-off
   * Profile2/3/4 + Scratch probes).
   *
-  * Usage: runMain graft.tools.Profile <mode> [sfDir] [threads]
+  * Usage: runMain graft.tools.Profile <mode> [sfDir]
+  * (engine profile at SPARK_GRAFT_CPUS cores; per-query timings are
+  * `graft.tools.Probe`'s)
   *   minhash    — stage timings of the minhash/LSH pipeline
   *   simhash    — stage timings of simhash fingerprints + banded pairs
   *   components — per-round timings of distributed connected components
@@ -27,14 +29,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("entry")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val threads = args.lift(2).getOrElse("32")
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Engine.session()
     mode match {
       case "minhash"    => minhash(spark, dir)
       case "simhash"    => simhash(spark, dir)
@@ -54,25 +49,7 @@ object Profile {
           df.collect()
           println(df.queryExecution.executedPlan.toString)
         }
-      case "query" =>
-        // isolated repeat-timing of ONE declared query through the bench's
-        // noop sink, cache cleared between reps — separates a query's own
-        // cost from cross-query cache interplay inside the full bench run.
-        // Args: query <name> [threads] [reps]; data dir from
-        // SPARK_GRAFT_SF_DIR (positions 2+ are taken by the global
-        // dir/threads parsing above).
-        val name = args.lift(1).getOrElse(sys.error("query mode needs a query name"))
-        val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        val reps = args.lift(3).map(_.toInt).getOrElse(5)
-        val q = graft.Queries.all.find(_.name == name)
-          .getOrElse(sys.error(s"no query named '$name'"))
-        graft.SparkEntry.entry(spark).count() // warmup: JIT + file index
-        (1 to reps).foreach { i =>
-          spark.sharedState.cacheManager.clearCache()
-          time(s"$name rep $i")(
-            q.run(spark, sfDir).write.format("noop").mode("overwrite").save())
-        }
-      case other => sys.error(s"unknown mode '$other' (minhash|simhash|components|entry|explain|query)")
+      case other => sys.error(s"unknown mode '$other' (minhash|simhash|components|entry|explain|explainExec)")
     }
     spark.stop()
   }

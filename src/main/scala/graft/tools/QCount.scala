@@ -1,16 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: row-count named queries at an SF dir (output-bound analysis). */
 object QCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Engine.session()
     args.tail.foreach { name =>
       println(s"[qcount] $name = ${graft.SparkEntry.queries(name)(spark, sfDir).count()}")
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.sources.Tables
@@ -26,14 +26,7 @@ object ScaleProbe {
     }.reduce(_ unionAll _)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Engine.session()
     val dir = "/root/testdata/sf0.1"
     val scale = args.headOption.map(_.toInt).getOrElse(10)
     // optional comma-list of label prefixes: run only matching families

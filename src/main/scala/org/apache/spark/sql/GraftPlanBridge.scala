@@ -18,4 +18,10 @@ object GraftPlanBridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Blocks until the listener bus has delivered every posted event
+    * (`waitUntilEmpty` is private[spark]): a listener read right after an
+    * action otherwise misses that action's last job events. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

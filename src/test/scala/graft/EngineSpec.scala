@@ -1,0 +1,77 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+
+import graft.functions.{GraftExtensions, GraftFunctions}
+
+/** The one engine profile: every session is built by `Engine`, and the
+  * sessions that tests and library users get carry its conf. */
+class EngineSpec extends SparkSpec {
+
+  /** Builds a new session on the shared SparkContext — with no active or
+    * default session, `getOrCreate` makes a fresh one instead of handing
+    * back the test session — then restores the test session. */
+  private def fresh(build: => SparkSession): SparkSession = {
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try build
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  private def assertCarries(s: SparkSession, conf: Seq[(String, String)]): Unit =
+    conf.foreach { case (k, v) =>
+      assert(s.conf.getOption(k).contains(v), s"$k: ${s.conf.getOption(k)} != $v")
+    }
+
+  test("only Engine builds sessions: no other source file calls the session builder") {
+    val needle = Seq("SparkSession", "builder").mkString(".")
+    val files = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    val callers = files.filter(p => Files.readString(p).contains(needle))
+      .map((p: Path) => p.toString.replace('\\', '/'))
+    assert(files.size > 50, s"scan found only ${files.size} files — wrong working dir?")
+    assert(callers == Seq("src/main/scala/graft/Engine.scala"), callers.mkString(", "))
+  }
+
+  test("the test session carries every Engine conf entry") {
+    assertCarries(spark, Engine.conf(cores = 4))
+    assert(spark.sparkContext.master == "local[4]")
+  }
+
+  test("Graft.session carries every Engine conf entry") {
+    val s = fresh(Graft.session(cores = 4))
+    assert(s ne spark)
+    assertCarries(s, Engine.conf(cores = 4))
+  }
+
+  test("the extensions path installs exactly the functions register installs") {
+    def graftNames(s: SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName)
+        .filter(_.startsWith("graft_")).toSet
+    val viaRegister = fresh(Engine.builder(cores = 4).getOrCreate())
+    assert(graftNames(viaRegister).isEmpty)
+    GraftFunctions.register(viaRegister)
+    val viaExtensions = fresh(Engine.builder(cores = 4)
+      .withExtensions(new GraftExtensions).getOrCreate())
+    assert(graftNames(viaRegister) == GraftFunctions.table.map(_.name).toSet)
+    assert(graftNames(viaExtensions) == graftNames(viaRegister))
+  }
+
+  test("Probe's job time is the union of job intervals, clipped to the run") {
+    // overlapping jobs count once; a gap between jobs is driver time
+    assert(tools.Probe.unionLength(Seq((10L, 30L), (20L, 40L), (50L, 60L)), 0L, 100L) == 40L)
+    // nested and duplicate intervals
+    assert(tools.Probe.unionLength(Seq((0L, 50L), (10L, 20L), (0L, 50L)), 0L, 100L) == 50L)
+    // clipped to the run window, so job time never exceeds wall
+    assert(tools.Probe.unionLength(Seq((-5L, 15L), (90L, 120L)), 0L, 100L) == 25L)
+    assert(tools.Probe.unionLength(Nil, 0L, 100L) == 0L)
+  }
+}
