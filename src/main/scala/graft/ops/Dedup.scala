@@ -128,14 +128,19 @@ object Dedup {
     * never per copy), replacing the exact-keeper semi join + full-corpus
     * minhash the r19 pipelines paid. Tracked in `caches` because every
     * caller references it from two plan positions (survivor list + pair
-    * generation). */
+    * generation). "Lowest" is by the LONG-cast id, the order every other
+    * dedup-family keeper uses (see [[nearDupComponents]]): for string ids
+    * "9" keeps over "10". `idCol` must therefore be long-castable, which
+    * the pipelines built on this (they cast pair ids to long) already
+    * require. */
   def exactRepresentatives(docs: DataFrame, idCol: String, textCol: String,
                            caches: DedupCaches = DedupCaches.unmanaged): DataFrame =
     caches.track(
       docs.select(TextOps.fingerprint(col(textCol)).as("fp"),
+          col(idCol).cast("long").as("__lid"),
           struct(col(idCol).as("id"), col(textCol).as("text")).as("__doc"))
         .groupBy(col("fp"))
-        .agg(min_by(col("__doc"), col("__doc.id")).as("__rep"))
+        .agg(min_by(col("__doc"), col("__lid")).as("__rep"))
         .select(col("__rep.id").as(idCol), col("__rep.text").as(textCol)))
 
   /** X1 cross-corpus dedup — drop every new-shard document whose

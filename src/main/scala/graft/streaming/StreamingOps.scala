@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
+  StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming / CDC operators (SURVEY.md §2.7).
   *
@@ -291,10 +294,29 @@ object StreamingOps {
     * form of [[scd2History]]: closed version rows are APPEND-ONLY at
     * `historyPath` (at 100 TB this is the big immutable table), while the
     * one open row per key lives in a compact snapshot at `currentPath`,
-    * atomically swapped per batch (write-tmp + rename). Per batch the work
-    * is O(batch + live keys) — the history table is never re-read, because
-    * closing an interval needs only the key's open row, and the version
-    * counter rides on the snapshot.
+    * atomically swapped per batch (write-tmp + rename). The history table
+    * is never re-read, because closing an interval needs only the key's
+    * open row, and the version counter rides on the snapshot.
+    *
+    * Plan: one per batch — the snapshot rows (tagged with their version
+    * as `__v0`) unioned with the batch rows, ONE hash exchange on the key,
+    * then windows over that key. The key's open edge is the tagged row's
+    * (valid_from, event_id), taken as a windowed max over the key; the
+    * filter below drops rows at or before it; `row_number` continues the
+    * open row's version and `lead` closes each interval. The result is
+    * cached once and both outputs are cut from it: closed rows
+    * (`valid_to` set) append to history, open rows become the snapshot.
+    * Trade-off: snapshot rows of keys the batch does not touch go through
+    * the key exchange too (they come out unchanged), where a semi/anti
+    * join split would have filtered them against the broadcast batch keys
+    * — but that split scanned the snapshot twice and ran five joins and a
+    * window as separate jobs. Per-batch work stays O(batch + live keys),
+    * with the snapshot scanned once; both plans rewrite the whole
+    * snapshot. Measured with 100-event batches over a pre-seeded snapshot
+    * (4 local cores, median per batch after 3 warm-up batches, two runs
+    * each), this plan stays faster than the split: 0.58-0.61 vs
+    * 0.81-0.89 s at 1e4 keys, 0.74-0.80 vs 0.99-1.07 s at 1e5, 1.48-1.51
+    * vs 1.84-1.95 s at 1e6.
     *
     * Ordering/idempotency policy: batch rows at or before the key's open
     * `valid_from` (ties broken by event_id) are DROPPED — this makes
@@ -307,52 +329,50 @@ object StreamingOps {
     * makes the retry re-append that batch's closed rows — at-least-once on
     * `historyPath`, exact on `currentPath`. Closed rows are unique by
     * (key, version), so readers needing exactly-once semantics without a
-    * transactional table format dedup on that pair. */
+    * transactional table format dedup on that pair. The snapshot is read
+    * under the [[readState]] contract: missing means first batch, present
+    * but unreadable or without data files fails the batch. */
   def incrementalScd2(changes: DataFrame, keyCol: String,
                       currentPath: String, historyPath: String,
                       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
-        val hadoop = spark.sparkContext.hadoopConfiguration
-        val curP = new org.apache.hadoop.fs.Path(currentPath)
-        val fs = curP.getFileSystem(hadoop)
         val newRows = batch.select(col(keyCol), col("event_id"),
           col("ts").as("valid_from"), col("value").as("state_value"))
-        // missing snapshot = first batch; any other read error must fail
-        // the batch (same contract as the dedup ledgers above)
-        val cur =
-          if (fs.exists(curP)) spark.read.parquet(currentPath)
-          else newRows.limit(0).withColumn("version", lit(0L))
-        val keys = newRows.select(col(keyCol)).distinct()
-        val curAffected = cur.join(keys, Seq(keyCol), "left_semi")
-          .withColumnRenamed("version", "__v0").withColumn("__open", lit(true))
-        val unaffected = cur.join(keys, Seq(keyCol), "left_anti")
-        // drop already-applied / out-of-order rows (policy above)
-        val openEdge = curAffected.select(col(keyCol),
-          col("valid_from").as("__f0"), col("event_id").as("__e0"))
-        val fresh = newRows.join(openEdge, Seq(keyCol), "left")
-          .where(col("__f0").isNull || col("valid_from") > col("__f0") ||
-            (col("valid_from") === col("__f0") && col("event_id") > col("__e0")))
-          .drop("__f0", "__e0")
-          .withColumn("__v0", lit(null).cast("long")).withColumn("__open", lit(false))
+        // the snapshot is this applier's own output: the batch projection
+        // plus the version counter
+        val cur = readStateOrEmpty(spark, currentPath, newRows.schema.add("version", LongType))
         val w = Window.partitionBy(col(keyCol)).orderBy(col("valid_from"), col("event_id"))
-        val versioned = curAffected.unionByName(fresh)
-          .withColumn("__base", max(col("__v0")).over(Window.partitionBy(col(keyCol))))
-          .withColumn("version",
-            row_number().over(w).cast("long") + coalesce(col("__base"), lit(0L))
-              - when(col("__base").isNotNull, lit(1L)).otherwise(lit(0L)))
-          .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-          .drop("__v0", "__base", "__open").cache()
+        // same partitioning and order as `w`, so both window passes share
+        // one exchange and one sort
+        val wKey = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        val open = col("__v0").isNotNull
+        // one select per window pass: each Dataset step re-analyzes the plan
+        val versioned = cur.withColumnRenamed("version", "__v0")
+          .unionByName(newRows.withColumn("__v0", lit(null).cast(LongType)))
+          .select(col("*"), max(when(open, col("valid_from"))).over(wKey).as("__f0"),
+            max(when(open, col("event_id"))).over(wKey).as("__e0"),
+            max(col("__v0")).over(wKey).as("__base"))
+          // drop already-applied / out-of-order rows (policy above)
+          .where(open || col("__f0").isNull || col("valid_from") > col("__f0") ||
+            (col("valid_from") === col("__f0") && col("event_id") > col("__e0")))
+          // the open row sorts first in its key, so it keeps its version
+          .select(col(keyCol), col("event_id"), col("valid_from"), col("state_value"),
+            (row_number().over(w).cast(LongType) + coalesce(col("__base") - 1L, lit(0L)))
+              .as("version"),
+            lead(col("valid_from"), 1).over(w).as("valid_to"))
+          .cache()
         versioned.where(col("valid_to").isNotNull)
           .write.mode("append").parquet(historyPath)
-        val snapshot = versioned.where(col("valid_to").isNull).drop("valid_to")
-          .unionByName(unaffected)
         // the snapshot is both input and output of this batch → write to a
         // tmp dir and atomically swap (overwriting a read path is illegal)
+        val curP = new org.apache.hadoop.fs.Path(currentPath)
+        val fs = curP.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val tmpP = new org.apache.hadoop.fs.Path(currentPath + "__tmp")
-        snapshot.write.mode("overwrite").parquet(tmpP.toString)
+        versioned.where(col("valid_to").isNull).drop("valid_to")
+          .write.mode("overwrite").parquet(tmpP.toString)
         versioned.unpersist()
         fs.delete(curP, true)
         if (!fs.rename(tmpP, curP))
@@ -387,50 +407,70 @@ object StreamingOps {
 
   /** Incremental exact corpus dedup — the CDC form of X1: documents
     * arrive as a stream; each micro-batch keeps the first document per
-    * fingerprint within the batch, anti-joins the persisted fingerprint
-    * LEDGER to drop documents seen in any earlier batch, then appends
-    * survivors to the corpus and their fingerprints to the ledger.
+    * fingerprint within the batch, drops documents whose fingerprint the
+    * persisted fingerprint LEDGER holds from any earlier batch, then
+    * appends survivors to the corpus and their fingerprints to the ledger.
+    *
+    * Plan: one per batch — a `row_number` window over the fingerprint
+    * keeps each fingerprint's lowest-id document, then an anti-join drops
+    * the ledger's fingerprints; Spark broadcasts the ledger while it is
+    * under the broadcast threshold and sort-merges it above. The ledger
+    * is read with its known schema, so no footer-inference job. Two
+    * other plans were measured against this one (100-document batches,
+    * 4 local cores, the plans interleaved batch by batch in one JVM,
+    * median per batch after 3 warm-up batches; this plan first):
+    * - the rank and the ledger folded into ONE exchange (batch rows ∪
+    *   ledger rows, one window with ledger rows ranked first): 0.38 vs
+    *   0.38 s over a 300-row ledger, 0.58 vs 0.69 s at 1e5 rows, 1.18 vs
+    *   1.90 s at 1e6 — it shuffles the whole ledger every batch;
+    * - that fold with the ledger first semi-joined against the batch's
+    *   broadcast fingerprints: 0.38 vs 0.47 s at 300 rows, 0.58 vs 0.59 s
+    *   at 1e5, 1.18 vs 0.59 s at 1e6 — the broadcast is one more job that
+    *   must finish before the exchange starts.
+    * The result is cached once and feeds both appends.
     *
     * The ledger row is 32 hex chars — at 100 TB it is the compacted,
     * bucketable state table this job shares across restarts (checkpoint
     * restores the stream position; the ledger makes the dedup decision
-    * durable). A failed batch can replay after the corpus append —
-    * at-least-once on the corpus sink. Exactly-once needs an ATOMIC
-    * commit of corpus + ledger (a transactional table format); merely
-    * reordering the writes ledger-first would turn crash-replays into
-    * silent data LOSS (fp durably "seen", document never appended).
+    * durable). It is read under the [[readState]] contract: ONLY a missing
+    * ledger means "first batch"; an existing ledger with no data files or
+    * an unreadable part file fails the batch — an empty `seen` would
+    * silently disable cross-batch dedup and append duplicates while
+    * reporting success. A failed batch can replay after the corpus
+    * append — at-least-once on the corpus sink. Exactly-once needs an
+    * ATOMIC commit of corpus + ledger (a transactional table format);
+    * merely reordering the writes ledger-first would turn crash-replays
+    * into silent data LOSS (fp durably "seen", document never appended).
     * Returns the started query. */
   def incrementalExactDedup(docs: DataFrame, idCol: String, textCol: String,
                             corpusPath: String, ledgerPath: String,
                             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val withFp = batch.withColumn("fp", graft.ops.TextOps.fingerprint(col(textCol)))
-        val w = Window.partitionBy(col("fp")).orderBy(col(idCol))
-        val firstPerFp = withFp.withColumn("__rk", row_number().over(w))
-          .where(col("__rk") === 1).drop("__rk")
-        // ONLY a missing ledger means "first batch". Any other read error
-        // (corrupt footer, FS fault) must fail the batch — an empty
-        // `seen` here would silently disable cross-batch dedup and append
-        // duplicates while reporting success.
-        val hPath = new org.apache.hadoop.fs.Path(ledgerPath)
-        val ledgerExists =
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-        val seen =
-          if (ledgerExists) spark.read.parquet(ledgerPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("fp",
-                org.apache.spark.sql.types.StringType))))
-        val fresh = firstPerFp.join(seen, Seq("fp"), "left_anti").cache()
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        val fresh = firstUnseen(batch, idCol, textCol,
+          readStateOrEmpty(batch.sparkSession, ledgerPath, FpLedger)).cache()
         fresh.drop("fp").write.mode("append").parquet(corpusPath)
         fresh.select(col("fp")).write.mode("append").parquet(ledgerPath)
         fresh.unpersist(): Unit
       }
       .start()
+
+  /** The fingerprint ledger's schema: this applier family writes it. */
+  private val FpLedger = StructType(Seq(StructField("fp", StringType)))
+
+  /** `batch` plus its `fp` column, cut to the lowest-id document of every
+    * fingerprint that `seen` (a fingerprint ledger) does not hold — the
+    * stage [[incrementalExactDedup]] and [[incrementalCurationPipeline]]
+    * share (plan and measurements at [[incrementalExactDedup]]). */
+  private def firstUnseen(batch: DataFrame, idCol: String, textCol: String,
+                          seen: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("fp")).orderBy(col(idCol))
+    batch.select(col("*"), graft.ops.TextOps.fingerprint(col(textCol)).as("fp"))
+      .select(col("*"), row_number().over(w).as("__rk"))
+      .where(col("__rk") === 1).drop("__rk")
+      .join(seen, Seq("fp"), "left_anti")
+  }
 
   /** Incremental NEAR-dedup — the streaming counterpart of the batch
     * MinHash-LSH pipeline: each micro-batch computes signatures for the
@@ -487,12 +527,9 @@ object StreamingOps {
         val withinLosers = Dedup.minhashLshPairs(b, idCol, textCol, k, r, estMin,
             threshold, caches = batchCaches)
           .select(col("doc_b").as("__loser")).distinct()
-        // (b) cross-batch: bucket join against the signature ledger
-        val hPath = new org.apache.hadoop.fs.Path(ledgerPath)
-        val ledgerExists =
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-        val crossLosers = if (ledgerExists) {
-          val seen = spark.read.parquet(ledgerPath)
+        // (b) cross-batch: bucket join against the signature ledger; the
+        // ledger holds `sig` rows and the corpus batch rows, both written here
+        val crossLosers = readState(spark, ledgerPath, sig.schema).map { seen =>
           val cands = Dedup.lshBands(sig, k, r).as("l")
             .join(Dedup.lshBands(seen, k, r).as("r"),
               col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
@@ -501,8 +538,10 @@ object StreamingOps {
             .distinct()
           // exact verify of the prefilter positives against the corpus
           // text (candidate-bounded; see scaladoc)
+          val corpus = readState(spark, corpusPath, b.schema).getOrElse(
+            throw new java.io.FileNotFoundException(s"$corpusPath: ledger without corpus"))
           val refSets = Dedup.docShingleSets(
-            spark.read.parquet(corpusPath).join(
+            corpus.join(
               cands.select(col("ref_id").as(idCol)).distinct(),
               Seq(idCol), "left_semi"),
             idCol, textCol)
@@ -517,12 +556,8 @@ object StreamingOps {
               (col("nn") + col("nr") - col("inter")).cast("double")
               >= lit(threshold))
             .select(col("doc_id").as("__loser")).distinct()
-        } else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__loser",
-              org.apache.spark.sql.types.LongType))))
-        val losers = withinLosers.unionAll(crossLosers).distinct()
+        }
+        val losers = crossLosers.fold(withinLosers)(withinLosers.unionAll).distinct()
         val survivors = b.join(losers,
           b(idCol) === losers("__loser"), "left_anti").cache()
         survivors.write.mode("append").parquet(corpusPath)
@@ -584,11 +619,14 @@ object StreamingOps {
       .foreachBatch { (batch0: Dataset[org.apache.spark.sql.Row], _: Long) =>
         import graft.ops.{Dedup, DedupCaches, TextOps}
         val spark = batch0.sparkSession
-        val hPath = new org.apache.hadoop.fs.Path(ledgerPath)
-        val ledgerExists =
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-        val seenAll =
-          if (ledgerExists) Some(spark.read.parquet(ledgerPath)) else None
+        // the ledger's one format: the append below writes exactly these
+        // columns, and readState fails on files written with another k
+        val ledgerSchema = StructType(Seq(
+            StructField("doc_id", LongType), StructField("fp", StringType),
+            StructField("toks", ArrayType(StringType)), StructField("n_toks", IntegerType)) ++
+          (0 until k).map(i => StructField(s"mh$i", LongType)) :+
+          StructField("root", LongType))
+        val seenAll = readState(spark, ledgerPath, ledgerSchema)
         // REPLAY GUARD: the ledger holds one row per EVER-processed doc,
         // so it doubles as the idempotence ledger — a crash-replayed
         // batch anti-joins to empty instead of re-appending survivors
@@ -648,13 +686,8 @@ object StreamingOps {
               .join(seen.select(col("fp"), col("root")), Seq("fp"))
               .select(col("doc_id"), col("root"))
             crossNear.unionAll(crossExact).distinct()
-          case None => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("root",
-                org.apache.spark.sql.types.LongType))))
+          case None => spark.createDataFrame(java.util.Collections.emptyList[Row](),
+            StructType(Seq(StructField("doc_id", LongType), StructField("root", LongType))))
         })
         // batch-local graph: (new,new) links + (new, contracted root)
         val edges = within.unionAll(
@@ -690,6 +723,7 @@ object StreamingOps {
         fpB.join(sets.select(col("doc_id"), col("toks"), col("n_toks")), Seq("doc_id"))
           .join(sig, Seq("doc_id"), "left")
           .join(assignment, Seq("doc_id"))
+          .select(ledgerSchema.map(f => col(f.name).cast(f.dataType)): _*)
           .write.mode("append").parquet(ledgerPath)
         batchCaches.unpersistAll(); b.unpersist(): Unit
       }
@@ -723,29 +757,46 @@ object StreamingOps {
       }
       .start()
 
-  /** The STREAMING curation program — the CDC mirror of the batch
-    * `x7_curation_pipeline` DAG, chaining the three incremental hygiene
-    * stages in ONE `foreachBatch` so a continuously-ingested corpus is
-    * maintained curated rather than re-curated from scratch:
-    *  1. exact dedup (the [[incrementalExactDedup]] stage inline): first
-    *     doc per fingerprint within the batch, anti-join the persisted
-    *     fp ledger;
-    *  2. decontamination against the static benchmark n-gram ledger (the
-    *     [[incrementalDecontaminate]] stage: read-only state, corpus side
-    *     never shuffles — grams broadcast);
-    *  3. the Gopher repetition gate in integer form (5·dup_grams ≤ grams,
-    *     n_toks ≥ 5 — stateless projection+filter, identical to x7's).
-    * Survivors append to the corpus, then stage 1's first-seen
-    * fingerprints append to the ledger (corpus-first crash ordering, see
-    * [[incrementalExactDedup]] — at-least-once on the corpus sink).
-    *
-    * Batch-parity: stages 2-3 are deterministic functions of the TEXT,
-    * and every member of a fingerprint group has fp-identical text (the
-    * fingerprint collapses exactly the case/whitespace the gram tokenizer
-    * also collapses), so maintain-incrementally and curate-once-batch
-    * produce the same corpus whenever ids arrive in ascending order (the
-    * batch keep-rule is min-id per fingerprint; streaming keeps
-    * first-seen) — proven against the x7 program in StreamingSpec. */
+  /** Reads a parquet state directory that an applier wrote itself, with
+    * the schema the applier knows it wrote — so no footer-inference job.
+    * ONLY a missing path is `None` (the first batch). A path that exists
+    * but holds no data files fails the batch here (checked on the file
+    * index, no job): reading it as empty would silently drop the state,
+    * e.g. disable cross-batch dedup and append duplicates while reporting
+    * success. A column of `schema` that the files lack would read as null
+    * (the state was written in another layout, e.g. a near-dedup ledger
+    * with a smaller k), so one file's footer is checked on the driver and
+    * a missing column fails the batch too. A corrupt part file fails the
+    * first job that scans it, before that job's write commits anything. */
+  private def readState(spark: SparkSession, path: String,
+                        schema: StructType): Option[DataFrame] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(conf).exists(p)) None
+    else {
+      val df = spark.read.schema(schema).parquet(path)
+      val files = df.inputFiles
+      if (files.isEmpty)
+        throw new java.io.IOException(s"state path $path exists but holds no data files")
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(files.head), conf))
+      val written = try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
+        finally reader.close()
+      val missing = schema.fieldNames.filterNot(written.contains)
+      if (missing.nonEmpty)
+        throw new java.io.IOException(
+          s"state path $path lacks columns ${missing.mkString(", ")}: written in another layout")
+      Some(df)
+    }
+  }
+
+  /** [[readState]], with an empty frame of `schema` for a missing path. */
+  private def readStateOrEmpty(spark: SparkSession, path: String,
+                               schema: StructType): DataFrame =
+    readState(spark, path, schema).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+
   /** Write `df` to `path` via a staging dir + rename — a concurrent
     * reader of the previous report sees either the old dir or the new
     * one, never a missing/partial dir (the delete-then-recompute-write
@@ -1089,29 +1140,22 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         import graft.ops.Similarity
         val spark = batch.sparkSession
-        val hadoop = spark.sparkContext.hadoopConfiguration
-        def exists(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hadoop).exists(hp)
-        }
         val newAll = Similarity.lshBucketFrame(batch, idCol, vecCol, bits)
+        // the ledger holds `newAll` rows, the view `newPairs` rows
+        val seen = readState(spark, vecLedgerPath, newAll.schema)
         // replay guard: a crash-redelivered batch is already in the ledger
-        val newB = (if (exists(vecLedgerPath))
-            newAll.join(spark.read.parquet(vecLedgerPath).select(col("id")),
-              Seq("id"), "left_anti")
-          else newAll).cache()
+        val newB = seen.fold(newAll)(sn =>
+          newAll.join(sn.select(col("id")), Seq("id"), "left_anti")).cache()
         val withinPairs = Similarity.cosineDirectedBetween(newB, newB)
-        val crossPairs = if (exists(vecLedgerPath)) {
-          val seen = spark.read.parquet(vecLedgerPath)
-          Similarity.cosineDirectedBetween(newB, seen)
-            .unionAll(Similarity.cosineDirectedBetween(seen, newB))
-        } else withinPairs.limit(0)
+        val crossPairs = seen.fold(withinPairs.limit(0))(sn =>
+          Similarity.cosineDirectedBetween(newB, sn)
+            .unionAll(Similarity.cosineDirectedBetween(sn, newB)))
         val newPairs = withinPairs.unionAll(crossPairs)
           .where(col("cosine") >= lit(threshold))
           .cache()
         val touched = newPairs.select(col("id")).distinct()
-        val oldView = if (exists(viewPath)) spark.read.parquet(viewPath)
-          else newPairs.limit(0)
+        val oldView = readState(spark, viewPath, newPairs.schema)
+          .getOrElse(newPairs.limit(0))
         // merge is bounded: ≤ k existing rows + this batch's pairs per id
         val rk = Window.partitionBy(col("id"))
           .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -1238,6 +1282,29 @@ object StreamingOps {
       }
       .start()
 
+  /** The STREAMING curation program — the CDC mirror of the batch
+    * `x7_curation_pipeline` DAG, chaining the three incremental hygiene
+    * stages in ONE `foreachBatch` so a continuously-ingested corpus is
+    * maintained curated rather than re-curated from scratch:
+    *  1. exact dedup (the [[incrementalExactDedup]] stage, shared): first
+    *     doc per fingerprint within the batch whose fingerprint the
+    *     persisted fp ledger does not hold, in one exchange;
+    *  2. decontamination against the static benchmark n-gram ledger (the
+    *     [[incrementalDecontaminate]] stage: read-only state, corpus side
+    *     never shuffles — grams broadcast);
+    *  3. the Gopher repetition gate in integer form (5·dup_grams ≤ grams,
+    *     n_toks ≥ 5 — stateless projection+filter, identical to x7's).
+    * Survivors append to the corpus, then stage 1's first-seen
+    * fingerprints append to the ledger (corpus-first crash ordering, see
+    * [[incrementalExactDedup]] — at-least-once on the corpus sink).
+    *
+    * Batch-parity: stages 2-3 are deterministic functions of the TEXT,
+    * and every member of a fingerprint group has fp-identical text (the
+    * fingerprint collapses exactly the case/whitespace the gram tokenizer
+    * also collapses), so maintain-incrementally and curate-once-batch
+    * produce the same corpus whenever ids arrive in ascending order (the
+    * batch keep-rule is min-id per fingerprint; streaming keeps
+    * first-seen) — proven against the x7 program in StreamingSpec. */
   def incrementalCurationPipeline(docs: DataFrame, idCol: String, textCol: String,
                                   benchLedgerPath: String, corpusPath: String,
                                   fpLedgerPath: String, checkpoint: String,
@@ -1247,21 +1314,8 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
         // stage 1 — exact dedup against the durable fingerprint ledger
-        val withFp = batch.withColumn("fp", graft.ops.TextOps.fingerprint(col(textCol)))
-        val w = Window.partitionBy(col("fp")).orderBy(col(idCol))
-        val firstPerFp = withFp.withColumn("__rk", row_number().over(w))
-          .where(col("__rk") === 1).drop("__rk")
-        val hPath = new org.apache.hadoop.fs.Path(fpLedgerPath)
-        val ledgerExists =
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-        val seen =
-          if (ledgerExists) spark.read.parquet(fpLedgerPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("fp",
-                org.apache.spark.sql.types.StringType))))
-        val d1 = firstPerFp.join(seen, Seq("fp"), "left_anti").cache()
+        val d1 = firstUnseen(batch, idCol, textCol,
+          readStateOrEmpty(spark, fpLedgerPath, FpLedger)).cache()
         // stage 2 — decontaminate vs the read-only bench ledger (a missing
         // path must fail the batch, not silently pass everything as clean)
         val bench = spark.read.parquet(benchLedgerPath)
@@ -1810,16 +1864,11 @@ object StreamingOps {
     emb.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val hPath = new org.apache.hadoop.fs.Path(codesPath)
-        val codesExist =
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
         val pts = batch.select(col(idCol).cast("long").as("pid"), col(vecCol))
-        val fresh =
-          if (codesExist)
-            pts.join(spark.read.parquet(codesPath).select(col("pid")).distinct(),
-              Seq("pid"), "left_anti")
-          else pts
+        // the code table's pid column (this applier writes the table)
+        val fresh = readState(batch.sparkSession, codesPath,
+            StructType(Seq(StructField("pid", LongType))))
+          .fold(pts)(codes => pts.join(codes.distinct(), Seq("pid"), "left_anti"))
         graft.ops.Similarity.pqEncode(fresh, "pid", vecCol, m, dim, codebooks)
           .write.mode("append").parquet(codesPath)
       }
@@ -1883,14 +1932,12 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val hPath = new org.apache.hadoop.fs.Path(ledgerPath)
-        val ledgerExists =
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
         // S rows — driver-side by design (same class as a broadcast dim)
         val totals: Map[Long, Long] =
-          if (ledgerExists)
-            spark.read.parquet(ledgerPath).as[(Long, Long)].collect().toMap
-          else (0L until shards.toLong).map(_ -> 0L).toMap
+          readState(spark, ledgerPath, StructType(Seq(
+              StructField("shard", LongType), StructField("total", LongType))))
+            .fold((0L until shards.toLong).map(_ -> 0L).toMap)(
+              _.as[(Long, Long)].collect().toMap)
         // batch-internal balance (scale-safe rank decomposition), then
         // pile i (i-th largest batch total) → i-th lightest shard
         val piles = graft.ops.Curation.shardManifest(batch, idCol, col(sizeCol), shards)

@@ -58,6 +58,15 @@ class Round20OpsSpec extends SparkSpec {
     assert(reps(60L) == "tiny doc")
   }
 
+  test("exactRepresentatives orders string ids numerically: \"9\" keeps over \"10\"") {
+    val reps = Dedup.exactRepresentatives(
+        Seq(("10", "same text"), ("9", "Same  TEXT"), ("11", "other")).toDF("doc_id", "text"),
+        "doc_id", "text")
+      .as[(String, String)].collect().toMap
+    // lexicographic order would pick "10"; the dedup family keeps the min long id
+    assert(reps == Map("9" -> "Same  TEXT", "11" -> "other"))
+  }
+
   test("nearDupComponents == connectedComponents over the FULL pair graph") {
     val full = Dedup.connectedComponents(
         Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.8),
