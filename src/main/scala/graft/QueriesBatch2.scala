@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import graft.streaming.StreamingOps
 
 /** batch 3: correlation stats, arg-extrema, grouping sets, sliding/nth frames, unpivot, simhash pairs, TF-IDF, quantization, source round-trips, approx distinct.
@@ -434,7 +434,7 @@ private[graft] trait QueriesBatch2 extends QueriesX14 {
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(path)
-      s.read.parquet(path)
+      Parquet.read(s, path)
         .where(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))

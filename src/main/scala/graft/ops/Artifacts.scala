@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Parquet
+
 /** Versioned persistence for TRAINED index artifacts — centroid tables
   * ([[Similarity.kmeansFit]]), PQ codebooks ([[Similarity.pqTrain]]),
   * PCA component tables ([[Similarity.pcaTopK]]), BPE merge tables
@@ -231,7 +233,7 @@ object Artifacts {
     require(meta.family == family,
       s"artifact family mismatch under $rootPath: expected '$family', " +
         s"found '${meta.family}' — wrong artifact root wired in")
-    (spark.read.parquet(new org.apache.hadoop.fs.Path(vDir, "data").toString), meta)
+    (Parquet.read(spark, new org.apache.hadoop.fs.Path(vDir, "data").toString), meta)
   }
 
   /** All committed versions with their sidecars, oldest first. */

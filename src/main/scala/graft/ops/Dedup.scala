@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -380,10 +380,7 @@ object Dedup {
     // editDistancePairs, constructing this frame runs the candidate
     // count as a Spark job (materializing the cache the verify reuses).
     val nCand = cand0.count()
-    val parts = math.max(
-      docs.sparkSession.sparkContext.defaultParallelism,
-      math.min(nCand / 65536L + 1L, 1L << 20).toInt)
-    val cand = cand0.repartition(parts, col("doc_a"))
+    val cand = cand0.repartition(verifyParts(docs.sparkSession, nCand), col("doc_a"))
     val a = sets.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"),
       col("n_toks").as("na"))
     val b = sets.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
@@ -1033,6 +1030,13 @@ object Dedup {
     *    30× corpus. The verify cost per collision is O(len·d) with the
     *    3-arg early-exit threshold form.
     *
+    * Eager: building the frame runs one Spark job. It caches the distinct
+    * keys and counts them (all keys, and those of length ≥ q·(d+1)) in
+    * one aggregate, and the counts size the verify and prefix partitions
+    * (~64k rows per task, never below the default parallelism). The
+    * cache it fills is the one the returned plan reads. The same holds
+    * for [[editDistanceTopK]] and the other callers of this chain.
+    *
     * Output: (a_id, b_id, dist), a_id < b_id. */
   def editDistanceJoin(docs: DataFrame, idCol: String, key: Column,
                        maxDist: Int = 2, q: Int = 2,
@@ -1108,6 +1112,13 @@ object Dedup {
       .select(col("id"), col("len"), col("key"), col("gram"), col("occ"))
   }
 
+  /** Task count for a compute-bound verify stage over `rows` rows: the
+    * cluster's default parallelism, or ~64k rows per partition above it
+    * (see [[editDistancePairs]]). */
+  private[ops] def verifyParts(spark: SparkSession, rows: Long): Int = math.max(
+    spark.sparkContext.defaultParallelism,
+    math.min(rows / 65536L + 1L, 1L << 20).toInt)
+
   /** [[editDistanceJoin]] without the terminal global sort — for consumers
     * that re-partition anyway (the top-k ranking window, components).
     *
@@ -1135,8 +1146,8 @@ object Dedup {
     val longMin = q * (d + 1) // both >= longMin → prefix principle holds
     val keysAll = docs.select(col(idCol).cast("long").as("id"), key.as("key"))
     // one representative per distinct key (lowest member id); the cache
-    // itself stays AQE-byte-sized — the count below materializes it and
-    // prices the verify parallelism from ROWS
+    // itself stays AQE-byte-sized — the counts below materialize it and
+    // price the verify parallelism from ROWS
     val keys = caches.track(keysAll.groupBy(col("key"))
       .agg(min(col("id")).as("id"))
       .withColumn("len", length(col("key"))))
@@ -1150,16 +1161,17 @@ object Dedup {
     // floor = the cluster's defaultParallelism (a compute-bound stage
     // must use every core even when bytes are tiny), above it ~64k keys
     // per partition so a 100 TB corpus gets rows-bounded partitions,
-    // never corpus/cores-sized ones. The count's cost is one job over
-    // the cache every branch below reads anyway. Keying the cached
-    // prefix by the self-join key also removes the self-join/stats-join
-    // exchanges outright (guide §2.4); oversized partitions still split
-    // via AQE skew-join handling.
-    val nKeys = keys.count()
-    def partsFor(rows: Long): Int = math.max(
-      docs.sparkSession.sparkContext.defaultParallelism,
-      math.min(rows / 65536L + 1L, 1L << 20).toInt)
-    val nParts = partsFor(nKeys)
+    // never corpus/cores-sized ones. Both counts — all keys, and the
+    // long keys the prefix stream is built from — come from one
+    // aggregate over the cache every branch below reads anyway; it runs
+    // while the frame is being built (documented on [[editDistanceJoin]]).
+    // Keying the cached prefix by the self-join key also removes the
+    // self-join/stats-join exchanges outright (guide §2.4); oversized
+    // partitions still split via AQE skew-join handling.
+    val counts = keys.agg(count(lit(1)),
+      count(when(col("len") >= longMin, lit(1)))).head()
+    val (nKeys, nLong) = (counts.getLong(0), counts.getLong(1))
+    val nParts = verifyParts(docs.sparkSession, nKeys)
     // banded verify: the 3-arg threshold form early-exits once a row of
     // the DP band exceeds d (O(len·d) per pair vs O(len²)) and returns −1
     // past the bound — kept pairs carry the exact distance
@@ -1194,9 +1206,11 @@ object Dedup {
     // cached partitioned by the self-join/stats key: the (gram, occ)
     // equi-joins below then read the cache exchange-free, and the verify
     // runs at a rows-derived task count regardless of byte size (the
-    // token stream is q·d+1 prefix rows per long key)
+    // token stream is q·d+1 prefix rows per long key — short keys emit
+    // none, so the count is sized from the long keys alone)
     val prefix = caches.track(prefixTokens(keys, maxDist, q)
-      .repartition(partsFor(nKeys * (q * d + 1)), col("gram"), col("occ")))
+      .repartition(verifyParts(docs.sparkSession, nLong * (q * d + 1)),
+        col("gram"), col("occ")))
     def allPairsOf(pfx: DataFrame): DataFrame =
       verify(pfx.as("l").join(pfx.as("r"),
           col("l.gram") === col("r.gram") && col("l.occ") === col("r.occ")

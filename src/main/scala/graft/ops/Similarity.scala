@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.sources.Parquet
 
 /** Similarity search over an embedding column (SURVEY.md §2.8 X2).
   *
@@ -123,7 +124,7 @@ object Similarity {
                      idCol: String, vecCol: String, centroids: DataFrame,
                      k: Int = 5): DataFrame = {
     GraftFunctions.register(spark)
-    val idxRaw = spark.read.parquet(indexPath)
+    val idxRaw = Parquet.read(spark, indexPath)
     // partition-type alignment: directory inference may type `cell` int
     // while assignment emits long — cast the SMALL side so the scan's
     // join key stays a bare partition attribute (a cast there would

@@ -6,14 +6,21 @@ import org.apache.spark.sql.functions._
 /** Typed loaders for the driver testdata (TESTDATA.md / FIXTURES.md §A).
   *
   * All tables are single parquet files per scale factor. Loaders are thin
-  * on purpose: `spark.read.parquet` keeps the scan declarative so Catalyst
+  * on purpose: a plain parquet scan keeps the plan declarative so Catalyst
   * pushes filters/column pruning into the parquet reader — at 100 TB the
   * same call reads a partitioned directory tree and partition pruning
   * applies unchanged.
+  *
+  * Every loader reads through [[Parquet.read]]: the schema comes from the
+  * table file's footer, read on the driver with the session conf at call
+  * time, and is passed to `spark.read.schema(...)`. So building a frame
+  * over a table runs no Spark job — a bare `spark.read.parquet` runs one
+  * per table to infer the same schema — and a query's first job is its
+  * own.
   */
 object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Scratch tag for the roundtrip queries' external writes: data-dir ×
     * session. The session UUID isolates the /tmp paths and catalog table

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
   StructField, StructType}
-import scala.jdk.CollectionConverters._
+
+import graft.sources.Parquet
 
 /** Structured-Streaming / CDC operators (SURVEY.md §2.7).
   *
@@ -748,7 +749,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         // the ledger is a precondition, not optional state: a missing path
         // must fail the batch, not silently pass everything as clean
-        val bench = spark.read.parquet(benchLedgerPath)
+        val bench = Parquet.read(spark, benchLedgerPath)
         val contaminated = graft.ops.TextOps.gramHashes(batch, idCol, textCol, n)
           .join(broadcast(bench), "gh")
           .select(col("doc_id").as("__dirty")).distinct()
@@ -765,24 +766,20 @@ object StreamingOps {
     * e.g. disable cross-batch dedup and append duplicates while reporting
     * success. A column of `schema` that the files lack would read as null
     * (the state was written in another layout, e.g. a near-dedup ledger
-    * with a smaller k), so one file's footer is checked on the driver and
-    * a missing column fails the batch too. A corrupt part file fails the
-    * first job that scans it, before that job's write commits anything. */
+    * with a smaller k), so one file's footer is checked on the driver
+    * ([[Parquet.footerSchema]]) and a missing column fails the batch too.
+    * A corrupt part file fails the first job that scans it, before that
+    * job's write commits anything. */
   private def readState(spark: SparkSession, path: String,
                         schema: StructType): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(conf).exists(p)) None
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else {
       val df = spark.read.schema(schema).parquet(path)
       val files = df.inputFiles
       if (files.isEmpty)
         throw new java.io.IOException(s"state path $path exists but holds no data files")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(files.head), conf))
-      val written = try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
-        finally reader.close()
+      val written = Parquet.footerSchema(spark, files.head).fieldNames
       val missing = schema.fieldNames.filterNot(written.contains)
       if (missing.nonEmpty)
         throw new java.io.IOException(
@@ -833,7 +830,7 @@ object StreamingOps {
                             currentBatchId: Long,
                             fold: String => org.apache.spark.sql.Column =
                               c => sum(col(c))): Unit = {
-    val all = spark.read.parquet(path)
+    val all = Parquet.read(spark, path)
       .dropDuplicates("batch_id" +: keyCols)
       .cache()
     try {
@@ -893,7 +890,7 @@ object StreamingOps {
         // batch count
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
           compactLedger(spark, ledgerPath, Seq("source", "tok"), Seq("cs"), batchId)
-        val accreted = spark.read.parquet(ledgerPath)
+        val accreted = Parquet.read(spark, ledgerPath)
           .dropDuplicates("batch_id", "source", "tok")
           .groupBy(col("source"), col("tok")).agg(sum(col("cs")).as("cs"))
         writeAtomic(
@@ -976,7 +973,7 @@ object StreamingOps {
         }
         // 2. optimize: weights from the accreted loss statistics
         val s = math.pow(10.0, wRoundDigits)
-        val stats = spark.read.parquet(statsLedgerPath)
+        val stats = Parquet.read(spark, statsLedgerPath)
           .dropDuplicates("batch_id", "source")
           .groupBy(col("source").as(sourceCol))
           .agg((floor(sum(col("loss_sum")) / sum(col("n")) * lit(s) + lit(0.5))
@@ -985,7 +982,7 @@ object StreamingOps {
         val weights = graft.ops.Curation.doremiFromStats(stats, sourceCol,
           eta, iters, wRoundDigits)
         // 3. report: drift KL beside the weight it motivates
-        val counts = spark.read.parquet(countLedgerPath)
+        val counts = Parquet.read(spark, countLedgerPath)
           .dropDuplicates("batch_id", "source", "tok")
           .groupBy(col("source"), col("tok")).agg(sum(col("cs")).as("cs"))
         writeAtomic(
@@ -994,7 +991,7 @@ object StreamingOps {
             .withColumn("as_of_batch", lit(batchId)),
           reportPath, coalesce1 = true)
         // 4. apply: resample the accreted corpus with the learned weights
-        val corpus = spark.read.parquet(docLedgerPath)
+        val corpus = Parquet.read(spark, docLedgerPath)
           .dropDuplicates(idCol).drop("batch_id")
         writeAtomic(
           graft.ops.Curation.mixtureSampleBy(corpus, idCol, sourceCol, weights, "weight"),
@@ -1042,11 +1039,11 @@ object StreamingOps {
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
           compactLedger(spark, countLedgerPath, Seq("bucket"),
             Seq("cr", "ct"), batchId)
-        val counts = spark.read.parquet(countLedgerPath)
+        val counts = Parquet.read(spark, countLedgerPath)
           .dropDuplicates("batch_id", "bucket")
           .groupBy(col("bucket"))
           .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
-        val corpus = spark.read.parquet(docLedgerPath)
+        val corpus = Parquet.read(spark, docLedgerPath)
           .dropDuplicates(idCol).drop("batch_id")
         writeAtomic(
           graft.ops.Curation.dsirWeightsFromCounts(corpus, textCol, counts,
@@ -1089,7 +1086,7 @@ object StreamingOps {
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
           compactLedger(spark, regLedgerPath, Seq(groupCol, "bucket"),
             Seq("m_j"), batchId, c => max(col(c)))
-        val regs = spark.read.parquet(regLedgerPath)
+        val regs = Parquet.read(spark, regLedgerPath)
           .dropDuplicates("batch_id", groupCol, "bucket")
           .groupBy(col(groupCol), col("bucket"))
           .agg(max(col("m_j")).as("m_j"))
@@ -1233,7 +1230,7 @@ object StreamingOps {
           .write.mode("append").parquet(edgeLedgerPath)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
           compactLedger(spark, edgeLedgerPath, Seq("src", "dst"), Seq("n"), batchId)
-        val edges = spark.read.parquet(edgeLedgerPath)
+        val edges = Parquet.read(spark, edgeLedgerPath)
           .dropDuplicates("batch_id", "src", "dst")
           .groupBy(col("src"), col("dst")).agg(sum(col("n")).as("weight"))
         // scoped cache handle: the recompute re-caches the graph frames
@@ -1270,7 +1267,7 @@ object StreamingOps {
         graft.ops.TextOps.classifierFeatures(batch, idCol, textCol,
             labelPred, buckets)
           .write.mode("append").parquet(featLedgerPath)
-        val feats = spark.read.parquet(featLedgerPath)
+        val feats = Parquet.read(spark, featLedgerPath)
           .dropDuplicates("doc_id", "bucket")
         val caches = new graft.ops.DedupCaches
         try writeAtomic(
@@ -1318,7 +1315,7 @@ object StreamingOps {
           readStateOrEmpty(spark, fpLedgerPath, FpLedger)).cache()
         // stage 2 — decontaminate vs the read-only bench ledger (a missing
         // path must fail the batch, not silently pass everything as clean)
-        val bench = spark.read.parquet(benchLedgerPath)
+        val bench = Parquet.read(spark, benchLedgerPath)
         val dirty = graft.ops.TextOps.gramHashes(d1, idCol, textCol, n)
           .join(broadcast(bench), "gh")
           .select(col("doc_id").as("__dirty")).distinct()
@@ -1393,7 +1390,7 @@ object StreamingOps {
             val cells = assigned.select(col("cell")).distinct()
               .collect().map(_.getLong(0))
             assigned.join(
-              spark.read.parquet(indexPath)
+              Parquet.read(spark, indexPath)
                 .where(col("cell").isin(cells.map(Long.box): _*))
                 .select(col("pid")),
               Seq("pid"), "left_anti")
@@ -1456,7 +1453,7 @@ object StreamingOps {
         val staging = new org.apache.hadoop.fs.Path(root, s".compact-${cellDir.getName}")
         val trash = new org.apache.hadoop.fs.Path(root, s".trash-${cellDir.getName}")
         fs.delete(staging, true); fs.delete(trash, true)
-        spark.read.parquet(cellDir.toString)
+        Parquet.read(spark, cellDir.toString)
           .repartition(nOut)
           .write.mode("overwrite").parquet(staging.toString)
         val nAfter = fs.listStatus(staging)
@@ -1595,7 +1592,7 @@ object StreamingOps {
       hot.foreach { cell =>
         val cellDir = new org.apache.hadoop.fs.Path(root, s"cell=$cell")
         // the [[incrementalAnnIndex]] layout stores (pid, pv) per cell dir
-        val members = spark.read.parquet(cellDir.toString)
+        val members = Parquet.read(spark, cellDir.toString)
         // deterministic seeds: the nSplit lowest pids (TakeOrdered — never
         // a full sort); a cell smaller than nSplit keeps every member as
         // its own seed
@@ -2012,7 +2009,7 @@ object StreamingOps {
         new org.apache.hadoop.fs.Path(root, "commit-*")))
       .getOrElse(Array.empty).map(_.getPath).sortBy(_.getName)
     val totals: Map[Long, Long] = committed.lastOption match {
-      case Some(last) => spark.read.parquet(s"$last/ledger")
+      case Some(last) => Parquet.read(spark, s"$last/ledger")
         .as[(Long, Long)].collect().toMap
       case None => (0L until shards.toLong).map(_ -> 0L).toMap
     }
@@ -2045,7 +2042,7 @@ object StreamingOps {
     * so this is a plain multi-dir parquet read with partition-less
     * pruning by commit). */
   def txnShardManifest(spark: SparkSession, rootPath: String): DataFrame =
-    spark.read.parquet(s"$rootPath/commit-*/manifest")
+    Parquet.read(spark, s"$rootPath/commit-*/manifest")
 
   /** Current totals of an [[incrementalShardAssignTxn]] root: the S-row
     * ledger inside the HIGHEST committed epoch. */
@@ -2056,7 +2053,7 @@ object StreamingOps {
         new org.apache.hadoop.fs.Path(root, "commit-*")))
       .getOrElse(Array.empty).map(_.getPath).sortBy(_.getName)
     require(committed.nonEmpty, s"no committed epochs under $rootPath")
-    spark.read.parquet(s"${committed.last}/ledger")
+    Parquet.read(spark, s"${committed.last}/ledger")
   }
 
   /** Append-ingest validation (reference buffer guards fawac.py:57-63):

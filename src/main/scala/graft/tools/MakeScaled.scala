@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
+import graft.sources.Parquet
+
 /** Dev tool: materialize an N× replica of a testdata scale-factor dir
   * with CONSISTENT key shifts — every join key (primary and foreign)
   * moves by the same `copy · span`, so each copy joins exactly its own
@@ -68,7 +70,7 @@ object MakeScaled {
     require(dupRate >= 0.0 && dupRate <= 1.0, s"dupRate $dupRate outside [0,1]")
     val spark = graft.Engine.session()
     keyCols.foreach { case (table, keys) =>
-      val src = spark.read.parquet(s"$srcDir/$table.parquet")
+      val src = Parquet.read(spark, s"$srcDir/$table.parquet")
       // int32 key columns: the largest shift must leave half the int
       // range for the original ids, or the cast back silently wraps
       keys.foreach { k =>

@@ -8,21 +8,27 @@ import org.apache.spark.sql.GraftPlanBridge
 import graft.{Engine, SparkEntry}
 
 /** Times named queries the way Bench does and splits each one's wall time
-  * into Spark job time and driver time.
+  * into Spark job time and driver time, and into building and running.
   *
-  * Each query runs three times through the noop sink, each run after
-  * `Engine.isolate`. The fastest run is reported with its job and task
-  * counts, its job time — the union of its job intervals, so concurrent
-  * jobs (broadcasts, subqueries) count once — and its driver gap, wall
-  * minus job time: analysis, planning and driver work between jobs. A
-  * failing query prints its exception class and message instead.
+  * Each query is built and run three times through the noop sink, each
+  * run after `Engine.isolate`. The fastest run is reported with its job
+  * and task counts, its job time — the union of its job intervals, so
+  * concurrent jobs (broadcasts, subqueries) count once — its driver gap,
+  * wall minus job time: analysis, planning and driver work between jobs —
+  * and its build: the time to construct the DataFrame and the jobs that
+  * ran before the noop write started. A last line totals the columns over
+  * the queries that ran. A failing query prints its exception class and
+  * message instead.
   *
   * Usage: tools/run_main.sh graft.tools.Probe <sfDir> <query> [query...]
   */
 object Probe {
   /** One run; times in seconds. */
-  final case class Run(wall: Double, jobs: Int, tasks: Int, jobTime: Double) {
+  final case class Run(wall: Double, jobs: Int, tasks: Int, jobTime: Double,
+                       build: Double = 0.0, buildJobs: Int = 0) {
     def gap: Double = wall - jobTime
+    def +(o: Run): Run = Run(wall + o.wall, jobs + o.jobs, tasks + o.tasks,
+      jobTime + o.jobTime, build + o.build, buildJobs + o.buildJobs)
   }
 
   /** Total length of the union of `intervals` clipped to `[t0, t1]`. */
@@ -56,6 +62,12 @@ object Probe {
     def run(t0: Long, t1: Long): Run = synchronized {
       Run((t1 - t0) / 1e3, intervals.size, tasks, unionLength(intervals.toSeq, t0, t1) / 1e3)
     }
+
+    /** The run that spanned `[t0, t1]`, built by `tb`: its build jobs are
+      * those that ended by then (the noop write's jobs start after it). */
+    def run(t0: Long, tb: Long, t1: Long): Run = synchronized {
+      run(t0, t1).copy(build = (tb - t0) / 1e3, buildJobs = intervals.count(_._2 <= tb))
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -68,8 +80,12 @@ object Probe {
     graft.functions.GraftFunctions.register(spark)
     val jobs = new Jobs
     sc.addSparkListener(jobs)
-    println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%5s ${"tasks"}%6s ${"job_s"}%8s ${"gap_s"}%8s")
-    args.tail.foreach { name =>
+    def row(name: String, r: Run): Unit =
+      println(f"$name%-32s ${r.wall}%8.3f ${r.jobs}%5d ${r.tasks}%6d " +
+        f"${r.jobTime}%8.3f ${r.gap}%8.3f ${r.buildJobs}%10d ${r.build}%8.3f")
+    println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%5s ${"tasks"}%6s ${"job_s"}%8s " +
+      f"${"gap_s"}%8s ${"build_jobs"}%10s ${"build_s"}%8s")
+    val ran = args.tail.flatMap { name =>
       try {
         val query = SparkEntry.queries(name)
         val best = (1 to 3).map { _ =>
@@ -77,17 +93,21 @@ object Probe {
           GraftPlanBridge.drainListeners(sc)
           jobs.reset()
           val t0 = System.currentTimeMillis()
-          query(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val df = query(spark, sfDir)
+          val tb = System.currentTimeMillis()
+          df.write.format("noop").mode("overwrite").save()
           val t1 = System.currentTimeMillis()
           GraftPlanBridge.drainListeners(sc)
-          jobs.run(t0, t1)
+          jobs.run(t0, tb, t1)
         }.minBy(_.wall)
-        println(f"$name%-32s ${best.wall}%8.3f ${best.jobs}%5d ${best.tasks}%6d " +
-          f"${best.jobTime}%8.3f ${best.gap}%8.3f")
+        row(name, best)
+        Some(best)
       } catch { case e: Throwable =>
         println(s"$name FAILED ${e.getClass.getName}: ${e.getMessage}")
+        None
       }
     }
+    row(s"TOTAL (${ran.length} queries)", ran.foldLeft(Run(0, 0, 0, 0))(_ + _))
     spark.stop()
   }
 }

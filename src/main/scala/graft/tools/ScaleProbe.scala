@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Dev-only 10× scale probe: replicate the sf0.1 tables with remapped
   * keys (≈ sf1: 6M lineitem rows, 50k docs, 50k embeddings), run the
@@ -574,7 +574,7 @@ object ScaleProbe {
           (System.nanoTime() - t0) / 1e9
         }
         q.stop()
-        val ledgerRows = spark.read.parquet(ledger).count()
+        val ledgerRows = Parquet.read(spark, ledger).count()
         val ledgerBytes = {
           val p = new org.apache.hadoop.fs.Path(ledger)
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -674,7 +674,7 @@ object ScaleProbe {
       }
       q.stop()
       def search(): Long =
-        spark.read.parquet(s"$dir/index").where(col("cell") === 0L).count()
+        Parquet.read(spark, s"$dir/index").where(col("cell") === 0L).count()
       def files(): Long = {
         val root = new org.apache.hadoop.fs.Path(s"$dir/index")
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

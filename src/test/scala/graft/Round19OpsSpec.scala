@@ -66,6 +66,47 @@ class Round19OpsSpec extends SparkSpec {
       Set((j, 0L, 1L)), s"member $j should see only the rep"))
   }
 
+  test("editDistancePairs sizes the prefix exchange from the long keys " +
+      "alone; pairs on a mostly-short corpus equal brute force") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    // q = 3, d = 1: longMin = 6, so the 100k five-char keys are short and
+    // emit no prefix tokens. Sized from all keys the (gram, occ) exchange
+    // would take 100,006 · (q·d+1) / 65536 + 1 = 7 partitions; from the
+    // 6 long keys it takes the default parallelism.
+    val longs = Seq(-1L -> "abcdefgh", -2L -> "abcdefgx", -3L -> "qwertyuiop",
+      -4L -> "qwertyuiopz", -5L -> "zzzzzzzz", -6L -> "mnbvcxzl")
+    val big = spark.range(100000L).select(col("id").as("doc_id"),
+        lpad(lower(conv(col("id").cast("string"), 10, 36)), 5, "0").as("key"))
+      .union(longs.toDF("doc_id", "key"))
+    val caches = new graft.ops.DedupCaches
+    try {
+      val pairs = graft.ops.Dedup.editDistancePairs(big, "doc_id", col("key"),
+        maxDist = 1, q = 3, maxGroupSize = None, caches)
+      val prefixParts = pairs.queryExecution.logical.collect {
+        case r: RepartitionByExpression
+            if r.partitionExpressions.exists(_.references.exists(_.name == "gram")) =>
+          r.optNumPartitions
+      }
+      // the prefix feeds both sides of its self-join: one node, seen twice
+      assert(prefixParts.distinct == Seq(Some(spark.sparkContext.defaultParallelism)))
+    } finally caches.unpersistAll()
+
+    def lev(a: String, b: String): Int = {
+      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        d(i)(j) = Seq(d(i - 1)(j) + 1, d(i)(j - 1) + 1,
+          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1)).min
+      d(a.length)(b.length)
+    }
+    val small = (0L until 60L).map(i => i -> java.lang.Long.toString(i % 45, 36)) ++ longs
+    val expect = (for ((a, ka) <- small; (b, kb) <- small if a < b && lev(ka, kb) <= 1)
+      yield (a, b, lev(ka, kb).toLong)).toSet
+    val got = graft.ops.Dedup.editDistanceJoin(small.toDF("doc_id", "key"), "doc_id",
+        col("key"), maxDist = 1, q = 3)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got == expect)
+  }
+
   test("editGroupReport: clique prefix groups carry all 6 keys and " +
       "C(6,2) candidate pairs; the small group reports 2 keys") {
     val rep = graft.ops.Dedup.editGroupReport(
