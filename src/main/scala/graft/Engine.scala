@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one session profile. Every entry point — Bench, Verify,
-  * the test session, `Graft.session` and the dev tools — builds its
-  * session here, so the board, the oracle dump, the tests and the plan
-  * dumps all run the same conf. Callers add deployment settings (app
-  * name, warehouse or local dirs) on the returned builder. */
+  * the test session, library users (`Engine.session`) and the dev tools —
+  * builds its session here, so the board, the oracle dump, the tests and
+  * the plan dumps all run the same conf. Callers add deployment settings
+  * (app name, warehouse or local dirs) on the returned builder. */
 object Engine {
   /** Local cores: `SPARK_GRAFT_CPUS`, default 4 (the driver contract's). */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)

@@ -645,19 +645,12 @@ object Dedup {
     *
     * Returns (id, component) for every node that appears in `pairs`;
     * component = min doc id reachable (deterministic, both paths).
-    *
-    * The session conf `spark.graft.dedup.localEdgeThreshold` overrides the
-    * `localEdgeThreshold` parameter when set, so a deployment can force the
-    * distributed path (set it to 0) or widen the driver path without code
-    * changes — the same operational lever as
-    * `spark.sql.autoBroadcastJoinThreshold`. */
+    * `localEdgeThreshold = 0` forces the distributed path. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           localEdgeThreshold: Long = 1000000L,
                           caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     val spark = pairs.sparkSession
-    val threshold = spark.conf.getOption("spark.graft.dedup.localEdgeThreshold")
-      .map(_.toLong).getOrElse(localEdgeThreshold)
     val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().cache()
@@ -665,7 +658,7 @@ object Dedup {
     // materialized aggregate, not a plan over edges) — always release it,
     // including on the non-convergence throw below
     try {
-    if (edges.count() <= threshold) {
+    if (edges.count() <= localEdgeThreshold) {
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {

@@ -95,9 +95,7 @@ object GraphOps {
     * engine-stable. */
   def pagerank(edges: DataFrame, beta: Double = 0.85, iters: Int = 5,
                roundDigits: Int = 8, materialize: Boolean = true,
-               caches: DedupCaches = DedupCaches.unmanaged,
-               checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+               caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     val s = math.pow(10.0, roundDigits)
     def pr(c: Column): Column = floor(c * lit(s) + lit(0.5)) / lit(s)
     // the static graph frames are read every iteration — cache once
@@ -114,7 +112,7 @@ object GraphOps {
       Seq("node"), "left_anti"))
     val r0 = nodes.crossJoin(broadcast(nn))
       .select(col("node"), (lit(1.0) / col("n")).as("r"))
-    (1 to iters).foldLeft(r0) { (ranks, i) =>
+    (1 to iters).foldLeft(r0) { (ranks, _) =>
       val dm = dangling.join(ranks, Seq("node"))
         .agg(coalesce(sum(col("r")), lit(0.0)).as("dsum"))
         .crossJoin(broadcast(nn))
@@ -134,16 +132,8 @@ object GraphOps {
           pr(lit(1.0 - beta) / col("n")
             + lit(beta) * (coalesce(col("insum"), lit(0.0)) + col("dm"))).as("r"))
       // materialize=false keeps the unrolled lazy plan — ONLY for plan
-      // inspection / few-iteration runs (the unroll doubles per iteration).
-      // checkpointEvery=n materializes every nth iteration instead of all:
-      // lineage doubles only across the ≤ n−1 unmaterialized steps
-      // (bounded 2^(n−1) subtree growth between cuts), trading that
-      // re-execution for n× fewer materializations — measured A/B in
-      // SCALING.md; identical ranks either way (rounding is per-iteration
-      // arithmetic, not a materialization effect).
-      if (materialize && (i % checkpointEvery == 0 || i == iters))
-        Checkpoints.planCheckpoint(next, eager = true)
-      else next
+      // inspection / few-iteration runs (the unroll doubles per iteration)
+      if (materialize) Checkpoints.planCheckpoint(next, eager = true) else next
     }.select(col("node"), col("r").as("rank"))
   }
 
@@ -168,9 +158,7 @@ object GraphOps {
     * Output: (node, hub, authority). */
   def hits(edges: DataFrame, iters: Int = 5, roundDigits: Int = 8,
            materialize: Boolean = true,
-           caches: DedupCaches = DedupCaches.unmanaged,
-           checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+           caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     val s = math.pow(10.0, roundDigits)
     def pr(c: Column): Column = floor(c * lit(s) + lit(0.5)) / lit(s)
     val e = caches.track(prepEdges(edges))
@@ -178,13 +166,9 @@ object GraphOps {
       .union(e.select(col("dst").as("node"))).distinct())
     val h0 = nodes.select(col("node"), lit(1.0).as("h"))
     val (hK, aK) = (1 to iters).foldLeft((h0, h0.select(col("node"),
-        lit(0.0).as("a")))) { case ((h, _), i) =>
-      // see pagerank's checkpointEvery note; the final iteration always
-      // materializes so the returned join reads two cut frames
+        lit(0.0).as("a")))) { case ((h, _), _) =>
       def ck(df: DataFrame): DataFrame =
-        if (materialize && (i % checkpointEvery == 0 || i == iters))
-          Checkpoints.planCheckpoint(df, eager = true)
-        else df
+        if (materialize) Checkpoints.planCheckpoint(df, eager = true) else df
       // araw/hraw are each referenced TWICE (the max normalizer's scalar
       // subtree and the normalize join) — uncached, the edge-keyed
       // aggregate ran once per reference, doubling every iteration's

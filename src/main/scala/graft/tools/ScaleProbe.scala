@@ -154,11 +154,12 @@ object ScaleProbe {
         pmod(col("vec_id"), lit(997)) === 3, iters = 2)),
       cnt(Similarity.kmeansFit(embN, "vec_id", "embedding",
         pmod(col("vec_id"), lit(997)) === 3, iters = 2)))
+    val mg = udaf(new MisraGriesAggregator(64))
+    def heavyHitters(docs: DataFrame) = docs
+      .select(col("source"), explode(TextOps.tokens(col("text"))).as("t"))
+      .groupBy(col("source")).agg(mg(col("t")).as("heavy_hitters"))
     probe("heavy hitters (MG 64 per source)",
-      cnt(graft.Graft.heavyHitters(docs1.select(col("source"),
-        explode(TextOps.tokens(col("text"))).as("t")), col("t"), Seq(col("source")), 64)),
-      cnt(graft.Graft.heavyHitters(docsN.select(col("source"),
-        explode(TextOps.tokens(col("text"))).as("t")), col("t"), Seq(col("source")), 64)))
+      cnt(heavyHitters(docs1)), cnt(heavyHitters(docsN)))
     probe("bigram LM perplexity",
       cnt(TextOps.lmPerplexityScore(docs1, "doc_id", "text")),
       cnt(TextOps.lmPerplexityScore(docsN, "doc_id", "text")))
@@ -456,24 +457,6 @@ object ScaleProbe {
     probe("hop distances (open graph)",
       cnt(GraphOps.hopDistances(synthGraph(20000L), seeds10)),
       cnt(GraphOps.hopDistances(synthGraph(20000L * scale), seeds10)))
-    // round-11 checkpoint-cadence A/B (not a 1x-vs-Nx probe): materialize
-    // every iteration vs every 2nd on the x8-shaped event graph —
-    // lineage doubles only per unmaterialized step, so ckpt=2 halves the
-    // materializations for one extra re-execution per cut
-    if (only.forall(_.exists("checkpoint cadence".startsWith))) {
-      Seq(("pagerank", 1), ("pagerank", 2), ("hits", 1), ("hits", 2))
-        .foreach { case (op, every) =>
-          val run: () => Long = op match {
-            case "pagerank" => () =>
-              cnt(GraphOps.pagerank(prEdges(evN), checkpointEvery = every))
-            case _ => () =>
-              cnt(GraphOps.hits(prEdges(evN), checkpointEvery = every))
-          }
-          val t = Seq(time(s"$op ckpt=$every warm")(run())._2,
-            time(s"$op ckpt=$every")(run())._2).min
-          println(f"[probe] checkpoint cadence $op every=$every $t%8.2f s")
-        }
-    }
     // containment shares jaccard's candidate machinery — the probe
     // measures the rare-shingle pair fan-out under replication (exact
     // copies share EVERY shingle, so df of their shingles grows with

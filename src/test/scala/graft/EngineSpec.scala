@@ -46,10 +46,22 @@ class EngineSpec extends SparkSpec {
     assert(spark.sparkContext.master == "local[4]")
   }
 
-  test("Graft.session carries every Engine conf entry") {
-    val s = fresh(Graft.session(cores = 4))
+  test("Engine.session carries every Engine conf entry") {
+    val s = fresh(Engine.session(cores = 4))
+    // Engine.session sets WARN on the shared context; the suites run at ERROR
+    spark.sparkContext.setLogLevel("ERROR")
     assert(s ne spark)
     assertCarries(s, Engine.conf(cores = 4))
+  }
+
+  test("the only spark.graft session-conf key is the reliable checkpoint dir") {
+    // a new session-conf knob has to be added to this list on purpose
+    val key = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    val keys = files.flatMap(p => key.findAllMatchIn(Files.readString(p)).map(_.group(1)))
+    // an empty scan (wrong working dir) fails here too: Checkpoints holds the key
+    assert(keys.toSet == Set("spark.graft.reliableCheckpointDir"), keys.mkString(", "))
   }
 
   test("the extensions path installs exactly the functions register installs") {

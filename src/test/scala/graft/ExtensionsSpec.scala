@@ -128,26 +128,18 @@ class ExtensionsSpec extends SparkSpec {
     assert(dist == want)
   }
 
-  test("spark.graft.dedup.localEdgeThreshold conf forces the distributed path") {
-    // same graph as above, but the conf (not the parameter) selects the
-    // path — the operational lever a 100 TB deployment uses. Conf 0 must
-    // run min-label propagation even though the parameter default is 1M.
+  test("localEdgeThreshold 0 routes connected components to the distributed path") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("doc_a", "doc_b")
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L)
-    spark.conf.set("spark.graft.dedup.localEdgeThreshold", "0")
-    try {
-      // maxIter 0 throws ONLY on the distributed path → proves conf routing
-      intercept[IllegalStateException] {
-        Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = 0)
-      }
-      val dist = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-        .as[(Long, Long)].collect().toMap
-      assert(dist == want)
-    } finally spark.conf.unset("spark.graft.dedup.localEdgeThreshold")
-    // conf unset → parameter default (1M) routes this 10-edge graph locally:
-    // maxIter 0 must NOT throw there
+    // maxIter 0 throws ONLY on the distributed path → proves the routing
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = 0,
+        localEdgeThreshold = 0L)
+    }
+    // the default (1M) routes this 10-edge graph locally: maxIter 0 must
+    // NOT throw there
     val local = Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = 0)
       .as[(Long, Long)].collect().toMap
     assert(local == want)
@@ -227,7 +219,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("X1 dedup pipeline keeps one doc per duplicate cluster") {
-    val kept = graft.Graft.dedupCorpus(docs, threshold = 0.9)
+    val kept = Dedup.dedupPipeline(docs, "doc_id", "text", 0.9)
       .select("doc_id").as[Long].collect().toSet
     assert(kept.contains(1L) && !kept.contains(2L)) // exact dup of 1 removed
     assert(kept.contains(4L))                        // unrelated doc survives

@@ -103,21 +103,6 @@ class Round11OpsSpec extends SparkSpec {
     }
   }
 
-  test("checkpoint cadence is a pure materialization knob — identical ranks") {
-    // per-iteration rounding is arithmetic, not a materialization effect,
-    // so every cadence must produce bit-identical ranks/scores
-    val e = cleanEdges
-    val pr1 = GraphOps.pagerank(e, iters = 5).as[(Long, Double)].collect().toMap
-    val pr2 = GraphOps.pagerank(e, iters = 5, checkpointEvery = 2)
-      .as[(Long, Double)].collect().toMap
-    assert(pr1 == pr2)
-    val h1 = GraphOps.hits(e, iters = 5)
-      .as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val h2 = GraphOps.hits(e, iters = 5, checkpointEvery = 2)
-      .as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(h1 == h2)
-  }
-
   test("exact re-rank dominates raw ADC top-k against the same exact reference") {
     // any true neighbor the ADC top-5 catches is in the 20-candidate
     // shortlist, and within the shortlist at most 4 items outrank it by

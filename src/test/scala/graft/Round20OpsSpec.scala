@@ -134,14 +134,6 @@ class Round20OpsSpec extends SparkSpec {
     assert(got == Set(20L, 30L, 41L, 50L, 60L, 64L))
   }
 
-  test("Graft.dedupClustersOf facade == nearDupComponents") {
-    val got = Graft.dedupClustersOf(docs, threshold = 0.8)
-      .as[(Long, Long)].collect().toSet
-    val want = Dedup.nearDupComponents(docs, "doc_id", "text", threshold = 0.8)
-      .as[(Long, Long)].collect().toSet
-    assert(got == want && got.nonEmpty)
-  }
-
   test("isScanRooted: nondeterministic narrow plans route to checkpoint") {
     val scan = spark.read.parquet(sf001 + "/lineitem.parquet")
     assert(graft.ops.AggOps.isScanRooted(scan.select(col("l_quantity"))))
