@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 
 /** The engine's one session profile. Every entry point — Bench, Verify,
   * the test session, library users (`Engine.session`) and the dev tools —
@@ -36,10 +36,13 @@ object Engine {
   def builder(cores: Int = cpus): SparkSession.Builder =
     conf(cores).foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
 
-  /** The engine session at `cores` local cores, Spark logging at WARN. */
+  /** The engine session at `cores` local cores. Spark logging is set to
+    * WARN only when this call starts the SparkContext: a session joining a
+    * running context keeps that context's log level. */
   def session(cores: Int = cpus): SparkSession = {
+    val joined = GraftPlanBridge.activeContext.isDefined
     val spark = builder(cores).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (!joined) spark.sparkContext.setLogLevel("WARN")
     spark
   }
 

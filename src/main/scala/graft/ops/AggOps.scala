@@ -14,10 +14,10 @@ object AggOps {
 
   /** True iff `df`'s analyzed plan is a cheap re-scannable tree: every
     * node is a leaf (file scan, local rows, checkpoint-block read) or a
-    * narrow Project/Filter/alias over one. Used to default the
-    * quantile family's `checkpointRows` lever (r19, closing the r18
-    * call-site opt-out): a scan-rooted input re-reads pruned parquet
-    * cheaper than materializing the projection once (x5_approx_quantile
+    * narrow Project/Filter/alias over one. Decides whether the quantile
+    * family checkpoints its row projection (r19): a scan-rooted input
+    * re-reads pruned parquet cheaper than materializing the projection
+    * once (x5_approx_quantile
     * 44.9 → 28.9 s at 60M rows), while a DERIVED input (joins,
     * aggregates, windows — e.g. [[madOutliers]]' nested quantiles) must
     * checkpoint or each of the ~6 plan references re-executes the
@@ -350,8 +350,7 @@ object AggOps {
   def exactQuantiles(df: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
                      valueCol: String, qs: Seq[Double],
                      buckets: Int = 1024, sortThreshold: Long = 1L << 16,
-                     levels: Int = 3,
-                     checkpointRows: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
+                     levels: Int = 3): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(groupCols.nonEmpty, "exactQuantiles needs at least one group column")
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
@@ -388,11 +387,7 @@ object AggOps {
     // sees a leaf instead of the subtree (a_mad_outliers back to ~2 s).
     // Still fully lazy — no driver action here. The narrow (group, value)
     // projection is the only sizable materialization, the same order the
-    // r15 sort-based form shuffled anyway. Fault tolerance (r18 lever):
-    // local checkpoint blocks die with their executor — set
-    // `spark.graft.reliableCheckpointDir` to switch every site below to a
-    // durable Dataset.checkpoint ([[Checkpoints.planCheckpoint]]) when a
-    // cluster-scale run can't afford whole-query re-runs. Block lifetime:
+    // r15 sort-based form shuffled anyway. Block lifetime:
     // the checkpointed RDDs are released by ContextCleaner when the
     // DataFrames are garbage-collected — a session running MANY
     // quantile-family queries reclaims them nondeterministically (driver
@@ -402,32 +397,30 @@ object AggOps {
     // the rows⋈stats and targets⋈cum joins below depend on AQE (on by
     // default) choosing broadcast at runtime; only frames bounded by
     // construction (≤ groups·qs rows) carry explicit broadcast() hints.
-    // checkpointRows is the re-scan-vs-materialize lever (measured r18,
-    // sf10 = 60M rows): when `df` is a cheap re-computable scan, the ~6
-    // plan references to `rows` re-read pruned parquet faster than
-    // materializing 60M rows once (x5_approx_quantile 44.9 → 28.9 s
-    // without the checkpoint) — but when `df` embeds a derived subtree
-    // (madOutliers nests one exactQuantiles inside another), re-execution
-    // costs more than the blocks save (a_mad_outliers 15.0 → 23.2 s the
-    // other way). Since r19 the default (None) reads the answer off the
-    // input plan itself ([[isScanRooted]]: leaf/Project/Filter-only →
-    // re-scan, anything derived → checkpoint); Some(_) still overrides.
-    // The BOUNDED aggregates below stay checkpointed either way — they
-    // are what stops the multiplicative analysis blowup.
+    // Re-scan vs materialize the rows (measured r18, sf10 = 60M rows):
+    // when `df` is a cheap re-computable scan, the ~6 plan references to
+    // `rows` re-read pruned parquet faster than materializing 60M rows
+    // once (x5_approx_quantile 44.9 → 28.9 s without the checkpoint) —
+    // but when `df` embeds a derived subtree (madOutliers nests one
+    // exactQuantiles inside another), re-execution costs more than the
+    // blocks save (a_mad_outliers 15.0 → 23.2 s the other way). The input
+    // plan itself decides ([[isScanRooted]]: leaf/Project/Filter-only →
+    // re-scan, anything derived → checkpoint). The BOUNDED aggregates
+    // below stay checkpointed either way — they are what stops the
+    // multiplicative analysis blowup.
     val rowsPlain = df.where(col(valueCol).isNotNull)
       .select(gs :+ col(valueCol).as("__v"): _*)
     val rows =
-      if (checkpointRows.getOrElse(!isScanRooted(df)))
-        Checkpoints.planCheckpoint(rowsPlain)
-      else rowsPlain
+      if (isScanRooted(df)) rowsPlain else rowsPlain.localCheckpoint(eager = false)
     // The BOUNDED intermediates (stats ≤ groups, cum ≤ groups·buckets,
     // located ≤ groups·qs rows) are checkpointed too: each is referenced
     // by 3–4 downstream branches per level (tie / small / big routing),
     // and those references multiply through the levels. All are aggregate
     // outputs bounded by design, so the materialized footprint is trivial.
-    val stats = Checkpoints.planCheckpoint(rows.groupBy(gs: _*)
+    val stats = rows.groupBy(gs: _*)
       .agg(count(lit(1)).as("__n"), min(col("__v")).as("__mn"),
-        max(col("__v")).as("__mx")))
+        max(col("__v")).as("__mx"))
+      .localCheckpoint(eager = false)
     // ---- SMALL-GROUP FAST PATH (r18): a group whose entire slice fits
     // under sortThreshold needs none of the bucket/locate/refine
     // machinery — one ranking window over its own rows (partition size
@@ -477,12 +470,13 @@ object AggOps {
             (col("__mx") - col("__mn")) * lit(buckets.toDouble)),
           lit((buckets - 1).toDouble))).cast("int"))
       .select(gs ++ Seq(col("__v"), col("__b")): _*)
-    val cum = Checkpoints.planCheckpoint(bucketed.groupBy(gs :+ col("__b"): _*)
+    val cum = bucketed.groupBy(gs :+ col("__b"): _*)
       .agg(count(lit(1)).as("__c"), min(col("__v")).as("__bmn"),
         max(col("__v")).as("__bmx"))
       .withColumn("__cumIncl",
         sum(col("__c")).over(Window.partitionBy(gs: _*).orderBy(col("__b"))))
-      .withColumn("__cumBefore", col("__cumIncl") - col("__c")))
+      .withColumn("__cumBefore", col("__cumIncl") - col("__c"))
+      .localCheckpoint(eager = false)
     // the rank expression is verbatim the r15 form's ceil(n · q) so the
     // selected position (and the hash-gated result) is unchanged
     val targets = bigG
@@ -491,12 +485,13 @@ object AggOps {
         greatest(ceil(col("__n") * col("__q")).cast("long"), lit(1L)))
     // located: one row per (group, q) — the selected bucket, the 1-based
     // offset of the target within it, and the bucket's own stats
-    val located = Checkpoints.planCheckpoint(targets
+    val located = targets
       .join(renamed(cum, "__c_"), keyCond("__c_"))
       .where(col("__cumBefore") < col("__k") && col("__k") <= col("__cumIncl"))
       .select(gs ++ Seq(col("__q"), col("__b"),
         (col("__k") - col("__cumBefore")).as("__off"),
-        col("__c"), col("__bmn"), col("__bmx")): _*))
+        col("__c"), col("__bmn"), col("__bmx")): _*)
+      .localCheckpoint(eager = false)
     // tie short-circuit: a single-valued bucket IS its every rank — the
     // O(n) heavy-tie bucket never reaches a join, let alone a sort
     val tie1 = located.where(col("__bmn") <=> col("__bmx"))
@@ -555,20 +550,21 @@ object AggOps {
           .withColumn("__b", least(floor((col("__v") - col("__lo")) /
               (col("__hi") - col("__lo")) * lit(buckets.toDouble)),
             lit((buckets - 1).toDouble)).cast("int"))
-        val subCum = Checkpoints.planCheckpoint(
-          bw.groupBy(gs ++ Seq(col("__q"), col("__b")): _*)
-            .agg(count(lit(1)).as("__c"), min(col("__v")).as("__bmn"),
-              max(col("__v")).as("__bmx"))
-            .withColumn("__cumIncl", sum(col("__c")).over(
-              Window.partitionBy(gs :+ col("__q"): _*).orderBy(col("__b"))))
-            .withColumn("__cumBefore", col("__cumIncl") - col("__c")))
-        val subLocated = Checkpoints.planCheckpoint(tgt
+        val subCum = bw.groupBy(gs ++ Seq(col("__q"), col("__b")): _*)
+          .agg(count(lit(1)).as("__c"), min(col("__v")).as("__bmn"),
+            max(col("__v")).as("__bmx"))
+          .withColumn("__cumIncl", sum(col("__c")).over(
+            Window.partitionBy(gs :+ col("__q"): _*).orderBy(col("__b"))))
+          .withColumn("__cumBefore", col("__cumIncl") - col("__c"))
+          .localCheckpoint(eager = false)
+        val subLocated = tgt
           .join(renamedQ(subCum, "__c_"), keyCondQ("__c_"))
           .where(col("__cumBefore") < col("__k") && col("__k") <= col("__cumIncl"))
           .select(gs ++ Seq(col("__q"),
             (col("__k") - col("__cumBefore")).as("__k2"),
             col("__c"), col("__bmn"), col("__bmx")): _*)
-          .withColumnRenamed("__k2", "__k"))
+          .withColumnRenamed("__k2", "__k")
+          .localCheckpoint(eager = false)
         val tie = subLocated.where(col("__bmn") <=> col("__bmx"))
           .select(gs ++ Seq(col("__q"), col("__bmn").as("__qval")): _*)
         val live = subLocated.where(!(col("__bmn") <=> col("__bmx")))
@@ -612,15 +608,12 @@ object AggOps {
     * values are ALL null gets NULL bounds via the left join, so its rows
     * also pass through as NULL. */
   def winsorize(df: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
-                valueCol: String, lowQ: Double, highQ: Double,
-                checkpointRows: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
+                valueCol: String, lowQ: Double, highQ: Double): org.apache.spark.sql.DataFrame = {
     require(lowQ > 0 && highQ < 1 && lowQ < highQ, s"need 0 < $lowQ < $highQ < 1")
     val gs = groupCols.map(col)
     // distributed discrete quantiles (r16 — see exactQuantiles: the old
-    // global-rank window sorted each group in one task); checkpointRows
-    // passes through — None auto-detects off the plan (see exactQuantiles)
-    val bounds = exactQuantiles(df, groupCols, valueCol, Seq(lowQ, highQ),
-      checkpointRows = checkpointRows)
+    // global-rank window sorted each group in one task)
+    val bounds = exactQuantiles(df, groupCols, valueCol, Seq(lowQ, highQ))
       .groupBy(gs: _*)
       .agg(
         min(when(col("__q") === lit(lowQ), col("__qval"))).as("__lo"),

@@ -94,7 +94,7 @@ object GraphOps {
     * the per-iteration rounding, so ordering by (rank desc, node) is
     * engine-stable. */
   def pagerank(edges: DataFrame, beta: Double = 0.85, iters: Int = 5,
-               roundDigits: Int = 8, materialize: Boolean = true,
+               roundDigits: Int = 8,
                caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     val s = math.pow(10.0, roundDigits)
     def pr(c: Column): Column = floor(c * lit(s) + lit(0.5)) / lit(s)
@@ -131,9 +131,7 @@ object GraphOps {
         .select(col("node"),
           pr(lit(1.0 - beta) / col("n")
             + lit(beta) * (coalesce(col("insum"), lit(0.0)) + col("dm"))).as("r"))
-      // materialize=false keeps the unrolled lazy plan — ONLY for plan
-      // inspection / few-iteration runs (the unroll doubles per iteration)
-      if (materialize) Checkpoints.planCheckpoint(next, eager = true) else next
+      next.localCheckpoint(eager = true)
     }.select(col("node"), col("r").as("rank"))
   }
 
@@ -157,7 +155,6 @@ object GraphOps {
     * — normalization and the hub step — so a lazy unroll compounds).
     * Output: (node, hub, authority). */
   def hits(edges: DataFrame, iters: Int = 5, roundDigits: Int = 8,
-           materialize: Boolean = true,
            caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     val s = math.pow(10.0, roundDigits)
     def pr(c: Column): Column = floor(c * lit(s) + lit(0.5)) / lit(s)
@@ -167,8 +164,6 @@ object GraphOps {
     val h0 = nodes.select(col("node"), lit(1.0).as("h"))
     val (hK, aK) = (1 to iters).foldLeft((h0, h0.select(col("node"),
         lit(0.0).as("a")))) { case ((h, _), _) =>
-      def ck(df: DataFrame): DataFrame =
-        if (materialize) Checkpoints.planCheckpoint(df, eager = true) else df
       // araw/hraw are each referenced TWICE (the max normalizer's scalar
       // subtree and the normalize join) — uncached, the edge-keyed
       // aggregate ran once per reference, doubling every iteration's
@@ -180,19 +175,21 @@ object GraphOps {
           .groupBy(col("dst").as("node"))
           .agg(sum(col("w") * col("h")).as("araw")))
       val amax = araw.agg(max(col("araw")).as("am"))
-      val a = ck(nodes.join(araw, Seq("node"), "left")
+      val a = nodes.join(araw, Seq("node"), "left")
         .crossJoin(broadcast(amax))
         .select(col("node"),
-          pr(coalesce(col("araw"), lit(0.0)) / col("am")).as("a")))
+          pr(coalesce(col("araw"), lit(0.0)) / col("am")).as("a"))
+        .localCheckpoint(eager = true)
       val hraw = caches.track(
         e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
           .groupBy(col("src").as("node"))
           .agg(sum(col("w") * col("a")).as("hraw")))
       val hmax = hraw.agg(max(col("hraw")).as("hm"))
-      val hNext = ck(nodes.join(hraw, Seq("node"), "left")
+      val hNext = nodes.join(hraw, Seq("node"), "left")
         .crossJoin(broadcast(hmax))
         .select(col("node"),
-          pr(coalesce(col("hraw"), lit(0.0)) / col("hm")).as("h")))
+          pr(coalesce(col("hraw"), lit(0.0)) / col("hm")).as("h"))
+        .localCheckpoint(eager = true)
       (hNext, a)
     }
     hK.join(aK, Seq("node"))
@@ -213,7 +210,6 @@ object GraphOps {
     * iteration as [[pagerank]] (per-round localCheckpoint: each round
     * reads dₜ twice — keep + relax). Output: (node, hops). */
   def hopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int = 5,
-                   materialize: Boolean = true,
                    caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     // unweighted op — edge frames without a weight column are legal here
     val e = caches.track(dropNullEdges(edges)
@@ -230,7 +226,7 @@ object GraphOps {
         .select(col("node"),
           least(coalesce(col("hops"), col("relax")),
             coalesce(col("relax"), col("hops"))).as("hops"))
-      if (materialize) Checkpoints.planCheckpoint(next, eager = true) else next
+      next.localCheckpoint(eager = true)
     }
     nodes.join(dK, Seq("node"), "left")
       .select(col("node"), col("hops"))
@@ -308,7 +304,6 @@ object GraphOps {
   def pagerankPersonalized(edges: DataFrame, seeds: DataFrame,
                            beta: Double = 0.85, iters: Int = 5,
                            roundDigits: Int = 8,
-                           materialize: Boolean = true,
                            caches: DedupCaches = DedupCaches.unmanaged): DataFrame = {
     val s = math.pow(10.0, roundDigits)
     def pr(c: Column): Column = floor(c * lit(s) + lit(0.5)) / lit(s)
@@ -340,7 +335,7 @@ object GraphOps {
           pr(lit(1.0 - beta) * col("tp")
             + lit(beta) * (coalesce(col("insum"), lit(0.0))
               + col("dmt") * col("tp"))).as("r"))
-      if (materialize) Checkpoints.planCheckpoint(next, eager = true) else next
+      next.localCheckpoint(eager = true)
     }.select(col("node"), col("r").as("rank"))
   }
 }

@@ -235,16 +235,14 @@ object TextOps {
     * the VOCABULARY-sized table — pair counts via a vocab-level explode,
     * the argmax as an ordered `limit(1)` (TakeOrderedAndProject, no
     * global sort), and the fuse as a one-row broadcast cross join. For k
-    * up to `checkpointEvery` the whole program is one declarative DAG;
-    * past that, the vocab table is `localCheckpoint`ed every
-    * `checkpointEvery` fuses — without the cap, iteration i replays (and
-    * Catalyst re-analyzes) the whole i-deep fuse chain, measured
-    * superlinear on the merge-count axis (0.19 s/merge at k=2 →
-    * 4.5 s/merge at k=8, SCALING.md round-9 probe); with it, each
+    * up to 4 the whole program is one declarative DAG; past that, the
+    * vocab table is `localCheckpoint`ed every 4 fuses — without the cut,
+    * iteration i replays (and Catalyst re-analyzes) the whole i-deep fuse
+    * chain, measured superlinear on the merge-count axis (0.19 s/merge at
+    * k=2 → 4.5 s/merge at k=8, SCALING.md round-9 probe); with it, each
     * iteration builds on a vocab-sized leaf and s/merge stays ~flat.
     * Values are unchanged — only lineage is truncated (the
-    * e2e_train_kstep treatment; checkpointEvery = 0 disables, restoring
-    * the single-DAG form).
+    * e2e_train_kstep treatment).
     *
     * Determinism: weights are integer sums (no float parity risk); ties
     * break lexicographically on the pair. Symbol encoding brackets every
@@ -276,7 +274,6 @@ object TextOps {
   def bpeMerges(docs: DataFrame, idCol: String, textCol: String,
                 merges: Int = 3,
                 caches: DedupCaches = DedupCaches.unmanaged,
-                checkpointEvery: Int = 4,
                 wordsOf: Column => Column = tokens): DataFrame = {
     require(merges >= 1, "need at least one merge step")
     val words = caches.track(
@@ -317,8 +314,7 @@ object TextOps {
           concat(lit("_"), col("left_sym"), lit("__"), col("right_sym"), lit("_")),
           concat(lit("_"), col("left_sym"), col("right_sym"), lit("_"))))
         .select(col("w"), col("freq"), col("enc"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 && it < merges)
-        vocab = vocab.localCheckpoint(true)
+      if (it % 4 == 0 && it < merges) vocab = vocab.localCheckpoint(eager = true)
       top.select(lit(it.toLong).as("iter"), col("left_sym"), col("right_sym"),
         concat(col("left_sym"), col("right_sym")).as("merged"),
         col("pair_weight"))

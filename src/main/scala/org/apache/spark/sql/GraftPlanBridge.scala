@@ -24,4 +24,9 @@ object GraftPlanBridge {
     * action otherwise misses that action's last job events. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The running SparkContext, if any, without creating one
+    * (`SparkContext.getActive` is private[spark]). */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
 }

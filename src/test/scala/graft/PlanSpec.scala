@@ -720,14 +720,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pagerank: iteration joins are keyed, never cartesian on node frames") {
-    // one LAZY iteration (materialize=false) so the executed plan shows the
-    // iteration's join shapes instead of the checkpointed leaf
+    // the iteration's eager localCheckpoint runs as a "localCheckpoint"
+    // action: its executed plan shows the iteration's join shapes, which
+    // the returned frame hides behind the checkpointed leaf
+    import org.apache.spark.sql.GraftPlanBridge
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cuts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") cuts.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
     val edges = graft.ops.GraphOps.transitionEdges(
       graft.sources.Tables.events(spark, sf001), "user_id",
       Seq(col("ts"), col("event_id")),
       get_json_object(col("props"), "$.k").cast("long"))
-    val p = graft.ops.GraphOps.pagerank(edges, iters = 1, materialize = false)
-      .queryExecution.executedPlan.toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.GraphOps.pagerank(edges, iters = 1)
+      GraftPlanBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(cuts.size == 1, s"one iteration, one cut: ${cuts.size}")
+    val p = cuts.peek()
     assert(!p.contains("CartesianProduct"),
       "only one-row scalars may cross-join (they plan as BroadcastNestedLoop)")
     // contrib joins key on src; rank update left-joins on node

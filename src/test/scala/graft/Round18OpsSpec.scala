@@ -93,7 +93,7 @@ class Round18OpsSpec extends SparkSpec {
     assert(rep.forall { case (n, c) => c == n * (n - 1) / 2 })
   }
 
-  // ---- exactQuantiles: small-group fast path + reliable checkpoints ----
+  // ---- exactQuantiles: small-group fast path ----
 
   private def bruteQuantiles(data: Seq[(String, Double)], qs: Seq[Double]) =
     data.groupBy(_._1).flatMap { case (k, rows) =>
@@ -125,34 +125,5 @@ class Round18OpsSpec extends SparkSpec {
       Seq.tabulate(1)(i => ("c", 42.0)) ++
       Seq.tabulate(500)(i => ("big", rnd.nextDouble() * 100))
     quantilesMatch(data, Seq(0.25, 0.5, 0.9, 1.0), sortThreshold = 32)
-  }
-
-  test("exactQuantiles checkpointRows=false (scan-rooted re-scan mode) " +
-      "≡ sort rule on mixed small/big groups") {
-    val rnd = new scala.util.Random(182)
-    val data =
-      Seq.tabulate(25)(i => ("s", rnd.nextDouble() * 7)) ++
-      Seq.tabulate(400)(i => ("big", rnd.nextDouble() * 50))
-    val got = graft.ops.AggOps.exactQuantiles(
-        data.toDF("k", "v").repartition(5), Seq("k"), "v", Seq(0.5, 0.9),
-        sortThreshold = 32, checkpointRows = Some(false))
-      .as[(String, Double, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(got == bruteQuantiles(data, Seq(0.5, 0.9)).toMap)
-  }
-
-  test("exactQuantiles reliable-checkpoint lever: identical results, " +
-      "durable checkpoint files written when the conf is set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rck").toString
-    val data = Seq.tabulate(300)(i => (s"g${i % 2}", (i * 37 % 100).toDouble))
-    try {
-      spark.conf.set(graft.ops.Checkpoints.ConfKey, dir)
-      quantilesMatch(data, Seq(0.5, 0.95), sortThreshold = 16)
-      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(written > 0, "reliable checkpoint dir stayed empty")
-    } finally spark.conf.unset(graft.ops.Checkpoints.ConfKey)
-    // and the default (local) mode still agrees
-    quantilesMatch(data, Seq(0.5, 0.95), sortThreshold = 16)
   }
 }

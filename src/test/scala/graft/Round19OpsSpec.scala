@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-19 hardening: the Ed-Join hot-group star guard (maxGroupSize),
-  * its skew report, and the quantile family's plan-shape checkpointRows
-  * auto-detection. */
+  * its skew report, and the quantile family's plan-shape re-scan
+  * detection. */
 class Round19OpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -123,7 +123,7 @@ class Round19OpsSpec extends SparkSpec {
     assert(rep.sliding(2).forall(w => w(0)._3 >= w(1)._3))
   }
 
-  // ---- checkpointRows auto-detection ------------------------------
+  // ---- re-scan detection -----------------------------------------
   test("isScanRooted: true for scan/project/filter trees, false for " +
       "aggregates, joins, and repartitions") {
     val dir = java.nio.file.Files.createTempDirectory("graft_r19_scan").toString
@@ -142,21 +142,28 @@ class Round19OpsSpec extends SparkSpec {
 
   test("exactQuantiles default (auto) matches the sort rule on a " +
       "scan-rooted input — the re-scan path end to end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r19_q").toString
-    val rnd = new scala.util.Random(19)
-    val data = Seq.tabulate(300)(i =>
-      (s"g${i % 3}", rnd.nextDouble() * 50))
-    data.toDF("k", "v").write.mode("overwrite").parquet(dir)
-    val got = graft.ops.AggOps.exactQuantiles(
-        spark.read.parquet(dir), Seq("k"), "v", Seq(0.5, 0.9),
-        sortThreshold = 32)
-      .as[(String, Double, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    val expect = data.groupBy(_._1).flatMap { case (k, rows) =>
-      val sorted = rows.map(_._2).sorted
-      Seq(0.5, 0.9).map(q =>
-        (k, q) -> sorted(math.ceil(sorted.size * q).toInt.max(1) - 1))
+    def check(data: Seq[(String, Double)]): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_r19_q").toString
+      data.toDF("k", "v").write.mode("overwrite").parquet(dir)
+      val scan = spark.read.parquet(dir)
+      assert(graft.ops.AggOps.isScanRooted(scan))
+      val got = graft.ops.AggOps.exactQuantiles(
+          scan, Seq("k"), "v", Seq(0.5, 0.9), sortThreshold = 32)
+        .as[(String, Double, Double)].collect()
+        .map(r => (r._1, r._2) -> r._3).toMap
+      val expect = data.groupBy(_._1).flatMap { case (k, rows) =>
+        val sorted = rows.map(_._2).sorted
+        Seq(0.5, 0.9).map(q =>
+          (k, q) -> sorted(math.ceil(sorted.size * q).toInt.max(1) - 1))
+      }
+      assert(got == expect)
     }
-    assert(got == expect)
+    val rnd = new scala.util.Random(19)
+    // big groups only: every group takes bucket/locate/refine
+    check(Seq.tabulate(300)(i => (s"g${i % 3}", rnd.nextDouble() * 50)))
+    // mixed: one group under the sort gate (fast path) and one over it
+    val mixed = new scala.util.Random(182)
+    check(Seq.tabulate(25)(i => ("s", mixed.nextDouble() * 7)) ++
+      Seq.tabulate(400)(i => ("big", mixed.nextDouble() * 50)))
   }
 }

@@ -71,17 +71,6 @@ class Round9OpsSpec extends SparkSpec {
       s"plan must grow linearly in k: k=2 → $len2 chars, k=8 → $len8")
   }
 
-  test("bpeMerges: checkpointed lineage produces the identical merge table") {
-    // localCheckpoint only truncates lineage — the trained artifact must
-    // be bit-identical to the single-DAG form at any k
-    def docs = sources.Tables.documents(spark, sf001)
-    val single = ops.TextOps.bpeMerges(docs, "doc_id", "text", merges = 6,
-      checkpointEvery = 0).collect().toSet
-    val capped = ops.TextOps.bpeMerges(docs, "doc_id", "text", merges = 6,
-      checkpointEvery = 2).collect().toSet
-    assert(capped == single, "checkpointing must not change the merges")
-  }
-
   test("k-step training loop: first two steps reproduce e2e_train_2step exactly") {
     val two = Queries.all.find(_.name == "e2e_train_2step").get
       .run(spark, sf001).collect().map(r =>
