@@ -56,6 +56,6 @@ object Engine {
     * lets ContextCleaner run, accumulating dead blocks over a board. */
   def isolate(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(GraftPlanBridge.unpersist)
   }
 }

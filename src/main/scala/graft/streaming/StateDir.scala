@@ -1,0 +1,157 @@
+package graft.streaming
+
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, sum}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.Parquet
+
+/** The one way a `foreachBatch` applier keeps state: parquet directories
+  * that the applier itself writes, read back with the schema it knows it
+  * wrote, each new version replacing the last through [[swap]], and
+  * additive per-epoch state kept as a ledger through [[accrete]].
+  *
+  * '''read''' (`read(spark, path, schema)`): ONLY a missing directory is
+  * `None`, the first batch. A directory that exists but holds no data
+  * files, or whose files lack a column of `schema` (state written in
+  * another layout), fails the batch on the driver with no job; a corrupt
+  * part file fails the first job that scans it, before that job's write
+  * commits anything. Reading a missing state as empty instead would
+  * silently drop it: disable cross-batch dedup, restart versions at 1.
+  *
+  * '''swap''' (`swap(df, path)`) replaces `path` with `df` in four steps:
+  *  1. write `df` to the hidden sibling `.<name>.staged`;
+  *  2. rename the live directory aside to `.<name>.aside`;
+  *  3. rename the staged copy in;
+  *  4. delete the aside copy.
+  * Every rename is checked: a rename that returns false fails the batch,
+  * and when step 3 fails the aside copy is renamed back, so the previous
+  * version stays readable. A crash leaves one of three torn states, and
+  * [[read]] and [[swap]] repair each before they touch `path`:
+  *  - staged only (crash in step 1 or 2): the live directory is still the
+  *    previous version and is used; the next swap overwrites the staged
+  *    copy;
+  *  - live moved aside (crash before step 3): the staged copy is complete
+  *    (it has Hadoop's `_SUCCESS` marker), so it is installed — the batch
+  *    that wrote it is replayed against its own result, which every
+  *    applier here treats as already applied. Without a complete staged
+  *    copy the aside copy is renamed back;
+  *  - installed, aside copy not yet deleted (crash before step 4): the
+  *    aside copy is deleted.
+  * So a reader never mistakes a torn swap for a first batch. Readers other
+  * than the applier see the previous or the new version, except between
+  * steps 2 and 3, when `path` is briefly missing.
+  *
+  * '''accrete''' (`accrete(rows, path, epoch, keys, fold)`) keeps
+  * additive per-epoch state as a ledger: `rows` are stamped with
+  * `batch_id = epoch` and appended; every [[FoldEvery]]-th epoch the
+  * committed epochs fold into one `batch_id = -1` row per key, swapped in
+  * by [[swap]] with the in-flight epoch's rows kept verbatim; the result
+  * is the ledger folded per key. A replayed epoch re-appends byte-identical
+  * rows (deterministic aggregation of the same input), which the read drops
+  * by `(batch_id, keys)`; only the in-flight epoch can replay, and it is
+  * never folded, so re-running a compaction gives the same ledger. `fold`
+  * must be associative and commutative over committed rows (sums; HLL
+  * registers fold by max).
+  *
+  * Single writer: each state directory belongs to one serial
+  * `foreachBatch`. The protocol assumes an atomic directory rename (HDFS,
+  * POSIX file systems; on an object store use a table format). */
+private[graft] object StateDir {
+
+  /** Committed epochs fold into the ledger's `batch_id = -1` rows at every
+    * epoch divisible by this, keeping an [[accrete]] ledger at about
+    * (keys + `FoldEvery` epochs) rows instead of growing with every batch. */
+  val FoldEvery = 8
+
+  /** `path` as the applier wrote it, repairing a torn [[swap]] first;
+    * `None` only when there is no state (the contract above). */
+  def read(spark: SparkSession, path: String, schema: StructType): Option[DataFrame] = {
+    val live = new Path(path)
+    val fs = recover(spark, live)
+    if (!fs.exists(live)) None
+    else {
+      val df = spark.read.schema(schema).parquet(path)
+      val files = df.inputFiles
+      if (files.isEmpty)
+        throw new IOException(s"state path $path exists but holds no data files")
+      val written = Parquet.footerSchema(spark, files.head).fieldNames
+      val missing = schema.fieldNames.filterNot(written.contains)
+      if (missing.nonEmpty)
+        throw new IOException(
+          s"state path $path lacks columns ${missing.mkString(", ")}: written in another layout")
+      Some(df)
+    }
+  }
+
+  /** Replaces `path` with `df` (the four steps above). */
+  def swap(df: DataFrame, path: String): Unit = {
+    val live = new Path(path)
+    val fs = recover(df.sparkSession, live)
+    val (staged, aside) = siblings(live)
+    df.write.mode("overwrite").parquet(staged.toString)
+    val moved = fs.exists(live)
+    if (moved) rename(fs, live, aside)
+    if (!fs.rename(staged, live)) {
+      if (moved) fs.rename(aside, live)
+      throw new IOException(s"state swap: could not rename $staged to $live")
+    }
+    if (moved && !fs.delete(aside, true))
+      throw new IOException(s"state swap: could not delete $aside")
+  }
+
+  /** Appends `rows` to the ledger at `path` as epoch `epoch` and returns
+    * the ledger folded per `keys`: one row per key, every other column of
+    * `rows` folded by `fold` (the contract above). */
+  def accrete(rows: DataFrame, path: String, epoch: Long, keys: Seq[String],
+              fold: String => Column = c => sum(col(c))): DataFrame = {
+    val spark = rows.sparkSession
+    // repair a torn compaction first: an append would recreate a missing
+    // ledger, and the repair would then drop its aside copy
+    recover(spark, new Path(path))
+    val stamped = rows.withColumn("batch_id", lit(epoch))
+    stamped.write.mode("append").parquet(path)
+    val values = rows.columns.filterNot(keys.contains)
+    def folded(ledger: DataFrame): DataFrame =
+      ledger.groupBy(keys.map(col): _*)
+        .agg(fold(values.head).as(values.head), values.tail.map(c => fold(c).as(c)): _*)
+    def ledger = read(spark, path, stamped.schema).getOrElse(
+      throw new IOException(s"ledger $path is missing after an append"))
+      .dropDuplicates("batch_id" +: keys)
+    if (epoch > 0 && epoch % FoldEvery == 0) {
+      val all = ledger
+      // folded rows keep the ledger's column types (a sum widens an int)
+      swap(folded(all.where(col("batch_id") =!= epoch)).withColumn("batch_id", lit(-1L))
+          .select(stamped.schema.map(f => col(f.name).cast(f.dataType)): _*)
+          .unionByName(all.where(col("batch_id") === epoch)),
+        path)
+    }
+    folded(ledger)
+  }
+
+  /** The hidden staged and aside siblings of `live`. */
+  private def siblings(live: Path): (Path, Path) =
+    (new Path(live.getParent, s".${live.getName}.staged"),
+      new Path(live.getParent, s".${live.getName}.aside"))
+
+  /** Repairs a torn [[swap]] of `live` (the three states above) and
+    * returns its file system. */
+  private def recover(spark: SparkSession, live: Path): FileSystem = {
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (staged, aside) = siblings(live)
+    if (!fs.exists(live)) {
+      if (fs.exists(new Path(staged, "_SUCCESS"))) rename(fs, staged, live)
+      else if (fs.exists(aside)) rename(fs, aside, live)
+    }
+    if (fs.exists(aside) && !fs.delete(aside, true))
+      throw new IOException(s"state recovery: could not delete $aside")
+    fs
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new IOException(s"state swap: could not rename $from to $to")
+}

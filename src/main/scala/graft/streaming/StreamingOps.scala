@@ -295,7 +295,7 @@ object StreamingOps {
     * form of [[scd2History]]: closed version rows are APPEND-ONLY at
     * `historyPath` (at 100 TB this is the big immutable table), while the
     * one open row per key lives in a compact snapshot at `currentPath`,
-    * atomically swapped per batch (write-tmp + rename). The history table
+    * replaced per batch by [[StateDir.swap]]. The history table
     * is never re-read, because closing an interval needs only the key's
     * open row, and the version counter rides on the snapshot.
     *
@@ -330,9 +330,8 @@ object StreamingOps {
     * makes the retry re-append that batch's closed rows — at-least-once on
     * `historyPath`, exact on `currentPath`. Closed rows are unique by
     * (key, version), so readers needing exactly-once semantics without a
-    * transactional table format dedup on that pair. The snapshot is read
-    * under the [[readState]] contract: missing means first batch, present
-    * but unreadable or without data files fails the batch. */
+    * transactional table format dedup on that pair. The snapshot is kept
+    * under the [[StateDir]] contract. */
   def incrementalScd2(changes: DataFrame, keyCol: String,
                       currentPath: String, historyPath: String,
                       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -344,7 +343,8 @@ object StreamingOps {
           col("ts").as("valid_from"), col("value").as("state_value"))
         // the snapshot is this applier's own output: the batch projection
         // plus the version counter
-        val cur = readStateOrEmpty(spark, currentPath, newRows.schema.add("version", LongType))
+        val curSchema = newRows.schema.add("version", LongType)
+        val cur = StateDir.read(spark, currentPath, curSchema).getOrElse(empty(spark, curSchema))
         val w = Window.partitionBy(col(keyCol)).orderBy(col("valid_from"), col("event_id"))
         // same partitioning and order as `w`, so both window passes share
         // one exchange and one sort
@@ -367,18 +367,8 @@ object StreamingOps {
           .cache()
         versioned.where(col("valid_to").isNotNull)
           .write.mode("append").parquet(historyPath)
-        // the snapshot is both input and output of this batch → write to a
-        // tmp dir and atomically swap (overwriting a read path is illegal)
-        val curP = new org.apache.hadoop.fs.Path(currentPath)
-        val fs = curP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val tmpP = new org.apache.hadoop.fs.Path(currentPath + "__tmp")
-        versioned.where(col("valid_to").isNull).drop("valid_to")
-          .write.mode("overwrite").parquet(tmpP.toString)
-        versioned.unpersist()
-        fs.delete(curP, true)
-        if (!fs.rename(tmpP, curP))
-          throw new java.io.IOException(s"snapshot swap failed: $tmpP -> $curP")
-        (): Unit
+        StateDir.swap(versioned.where(col("valid_to").isNull).drop("valid_to"), currentPath)
+        versioned.unpersist(): Unit
       }
       .start()
 
@@ -433,15 +423,12 @@ object StreamingOps {
     * The ledger row is 32 hex chars — at 100 TB it is the compacted,
     * bucketable state table this job shares across restarts (checkpoint
     * restores the stream position; the ledger makes the dedup decision
-    * durable). It is read under the [[readState]] contract: ONLY a missing
-    * ledger means "first batch"; an existing ledger with no data files or
-    * an unreadable part file fails the batch — an empty `seen` would
-    * silently disable cross-batch dedup and append duplicates while
-    * reporting success. A failed batch can replay after the corpus
-    * append — at-least-once on the corpus sink. Exactly-once needs an
-    * ATOMIC commit of corpus + ledger (a transactional table format);
-    * merely reordering the writes ledger-first would turn crash-replays
-    * into silent data LOSS (fp durably "seen", document never appended).
+    * durable). It is read under the [[StateDir]] contract. A failed batch
+    * can replay after the corpus append — at-least-once on the corpus
+    * sink. Exactly-once needs an ATOMIC commit of corpus + ledger (a
+    * transactional table format); merely reordering the writes
+    * ledger-first would turn crash-replays into silent data LOSS (fp
+    * durably "seen", document never appended).
     * Returns the started query. */
   def incrementalExactDedup(docs: DataFrame, idCol: String, textCol: String,
                             corpusPath: String, ledgerPath: String,
@@ -449,16 +436,23 @@ object StreamingOps {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val fresh = firstUnseen(batch, idCol, textCol,
-          readStateOrEmpty(batch.sparkSession, ledgerPath, FpLedger)).cache()
+        val fresh = firstUnseen(batch, idCol, textCol, fpLedger(batch.sparkSession, ledgerPath))
+          .cache()
         fresh.drop("fp").write.mode("append").parquet(corpusPath)
         fresh.select(col("fp")).write.mode("append").parquet(ledgerPath)
         fresh.unpersist(): Unit
       }
       .start()
 
-  /** The fingerprint ledger's schema: this applier family writes it. */
-  private val FpLedger = StructType(Seq(StructField("fp", StringType)))
+  /** The fingerprint ledger at `path`, empty before the first batch: this
+    * applier family writes it with one `fp` string column. */
+  private def fpLedger(spark: SparkSession, path: String): DataFrame = {
+    val schema = StructType(Seq(StructField("fp", StringType)))
+    StateDir.read(spark, path, schema).getOrElse(empty(spark, schema))
+  }
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** `batch` plus its `fp` column, cut to the lowest-id document of every
     * fingerprint that `seen` (a fingerprint ledger) does not hold — the
@@ -530,7 +524,7 @@ object StreamingOps {
           .select(col("doc_b").as("__loser")).distinct()
         // (b) cross-batch: bucket join against the signature ledger; the
         // ledger holds `sig` rows and the corpus batch rows, both written here
-        val crossLosers = readState(spark, ledgerPath, sig.schema).map { seen =>
+        val crossLosers = StateDir.read(spark, ledgerPath, sig.schema).map { seen =>
           val cands = Dedup.lshBands(sig, k, r).as("l")
             .join(Dedup.lshBands(seen, k, r).as("r"),
               col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
@@ -539,7 +533,7 @@ object StreamingOps {
             .distinct()
           // exact verify of the prefilter positives against the corpus
           // text (candidate-bounded; see scaladoc)
-          val corpus = readState(spark, corpusPath, b.schema).getOrElse(
+          val corpus = StateDir.read(spark, corpusPath, b.schema).getOrElse(
             throw new java.io.FileNotFoundException(s"$corpusPath: ledger without corpus"))
           val refSets = Dedup.docShingleSets(
             corpus.join(
@@ -621,13 +615,13 @@ object StreamingOps {
         import graft.ops.{Dedup, DedupCaches, TextOps}
         val spark = batch0.sparkSession
         // the ledger's one format: the append below writes exactly these
-        // columns, and readState fails on files written with another k
+        // columns, and StateDir.read fails on files written with another k
         val ledgerSchema = StructType(Seq(
             StructField("doc_id", LongType), StructField("fp", StringType),
             StructField("toks", ArrayType(StringType)), StructField("n_toks", IntegerType)) ++
           (0 until k).map(i => StructField(s"mh$i", LongType)) :+
           StructField("root", LongType))
-        val seenAll = readState(spark, ledgerPath, ledgerSchema)
+        val seenAll = StateDir.read(spark, ledgerPath, ledgerSchema)
         // REPLAY GUARD: the ledger holds one row per EVER-processed doc,
         // so it doubles as the idempotence ledger — a crash-replayed
         // batch anti-joins to empty instead of re-appending survivors
@@ -758,113 +752,12 @@ object StreamingOps {
       }
       .start()
 
-  /** Reads a parquet state directory that an applier wrote itself, with
-    * the schema the applier knows it wrote — so no footer-inference job.
-    * ONLY a missing path is `None` (the first batch). A path that exists
-    * but holds no data files fails the batch here (checked on the file
-    * index, no job): reading it as empty would silently drop the state,
-    * e.g. disable cross-batch dedup and append duplicates while reporting
-    * success. A column of `schema` that the files lack would read as null
-    * (the state was written in another layout, e.g. a near-dedup ledger
-    * with a smaller k), so one file's footer is checked on the driver
-    * ([[Parquet.footerSchema]]) and a missing column fails the batch too.
-    * A corrupt part file fails the first job that scans it, before that
-    * job's write commits anything. */
-  private def readState(spark: SparkSession, path: String,
-                        schema: StructType): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else {
-      val df = spark.read.schema(schema).parquet(path)
-      val files = df.inputFiles
-      if (files.isEmpty)
-        throw new java.io.IOException(s"state path $path exists but holds no data files")
-      val written = Parquet.footerSchema(spark, files.head).fieldNames
-      val missing = schema.fieldNames.filterNot(written.contains)
-      if (missing.nonEmpty)
-        throw new java.io.IOException(
-          s"state path $path lacks columns ${missing.mkString(", ")}: written in another layout")
-      Some(df)
-    }
-  }
-
-  /** [[readState]], with an empty frame of `schema` for a missing path. */
-  private def readStateOrEmpty(spark: SparkSession, path: String,
-                               schema: StructType): DataFrame =
-    readState(spark, path, schema).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
-
-  /** Write `df` to `path` via a staging dir + rename — a concurrent
-    * reader of the previous report sees either the old dir or the new
-    * one, never a missing/partial dir (the delete-then-recompute-write
-    * window of a plain overwrite). The delete+rename pair is the
-    * practical atomicity parquet-on-a-filesystem offers; a table format
-    * with a pointer swap would close the remaining sliver. */
-  private def writeAtomic(df: DataFrame, path: String,
-                          coalesce1: Boolean = false): Unit = {
-    val staging = path + ".staging"
-    (if (coalesce1) df.coalesce(1) else df)
-      .write.mode("overwrite").parquet(staging)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(hp, true)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), hp): Unit
-  }
-
-  /** Fold every COMMITTED batch's ledger rows into one `batch_id = -1`
-    * summary row per key, keeping the in-flight batch's rows verbatim —
-    * bounds the append-only ledger at (keys + current batch) rows so the
-    * per-batch re-aggregation stays flat instead of growing linearly
-    * with batch count (O(n²) cumulative).
-    *
-    * Replay safety: only the CURRENT batch can re-deliver after a crash
-    * (earlier batches are checkpoint-committed), and its rows are
-    * excluded from the fold — a replayed append is still removed by the
-    * read-side dropDuplicates on (batch_id, key), and re-running the
-    * compaction itself re-folds the same committed rows to the same
-    * totals (idempotent). The rewrite goes through the same
-    * staging+rename as the reports; the ledger's only reader is this
-    * serial foreachBatch. */
-  private def compactLedger(spark: SparkSession, path: String,
-                            keyCols: Seq[String], sumCols: Seq[String],
-                            currentBatchId: Long,
-                            fold: String => org.apache.spark.sql.Column =
-                              c => sum(col(c))): Unit = {
-    val all = Parquet.read(spark, path)
-      .dropDuplicates("batch_id" +: keyCols)
-      .cache()
-    try {
-      // `fold` must be associative+commutative over committed rows (the
-      // default additive sum; HLL registers fold by max — idempotent too)
-      val folded = all.where(col("batch_id") =!= currentBatchId)
-        .groupBy(keyCols.map(col): _*)
-        .agg(fold(sumCols.head).as(sumCols.head),
-          sumCols.tail.map(c => fold(c).as(c)): _*)
-        .withColumn("batch_id", lit(-1L))
-      val staged = folded.unionByName(
-        all.where(col("batch_id") === currentBatchId))
-      writeAtomic(staged, path)
-    } finally all.unpersist(): Unit
-  }
-
   /** Incremental corpus-drift monitor — the CDC mirror of
-    * `x3_corpus_drift`: each micro-batch's (source, token) counts append
-    * to a durable ledger stamped with the batch id, and the per-source KL
-    * report is recomputed from the accreted counts and swapped in at
-    * `reportPath` via staging+rename (a concurrent reader never sees a
-    * missing or partial report). The ledger is append-only between
-    * compactions: every `compactEvery` batches the committed rows fold
-    * into one `batch_id = -1` summary per (source, tok) — counts are
-    * additive, so the fold is lossless and the per-batch re-aggregation
-    * cost stays flat instead of growing with batch count.
-    *
-    * Crash/replay contract: a replayed batch re-appends byte-identical
-    * (batch_id, source, tok, cs) rows — deterministic aggregation of
-    * deterministic input — so the read-side `dropDuplicates` on that key
-    * makes re-delivery idempotent WITHOUT a read-modify-write upsert (the
-    * same reasoning as the dedup ledgers' at-least-once appends, but for
-    * additive state: increments can't be deduplicated by value alone,
-    * hence the batch-id stamp).
+    * `x3_corpus_drift`: each micro-batch's (source, token) counts accrete
+    * to a durable ledger ([[StateDir.accrete]]: counts are additive, so
+    * the fold is lossless and a replayed batch counts once), and the
+    * per-source KL report is recomputed from the accreted counts and
+    * swapped in at `reportPath` ([[StateDir.swap]]).
     *
     * The count ledger is the sufficient statistic for the whole report
     * ([[graft.ops.TextOps.driftFromCounts]]): token counts are additive
@@ -874,31 +767,24 @@ object StreamingOps {
   def incrementalDriftMonitor(docs: DataFrame, textCol: String, sourceCol: String,
                               ledgerPath: String, reportPath: String,
                               checkpoint: String, alpha: Double = 0.5,
-                              roundDigits: Int = 4,
-                              compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
+                              roundDigits: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val inc = batch.select(col(sourceCol).as("source"),
-            explode(graft.ops.TextOps.tokens(col(textCol))).as("tok"))
-          .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cs"))
-          .withColumn("batch_id", lit(batchId))
-        inc.write.mode("append").parquet(ledgerPath)
-        // counts are additive, so committed batches fold losslessly —
-        // keeps the per-batch re-aggregation flat instead of linear in
-        // batch count
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactLedger(spark, ledgerPath, Seq("source", "tok"), Seq("cs"), batchId)
-        val accreted = Parquet.read(spark, ledgerPath)
-          .dropDuplicates("batch_id", "source", "tok")
-          .groupBy(col("source"), col("tok")).agg(sum(col("cs")).as("cs"))
-        writeAtomic(
+        val accreted = StateDir.accrete(tokenCounts(batch, textCol, sourceCol),
+          ledgerPath, batchId, Seq("source", "tok"))
+        StateDir.swap(
           graft.ops.TextOps.driftFromCounts(accreted, alpha, roundDigits)
-            .withColumn("as_of_batch", lit(batchId)),
-          reportPath, coalesce1 = true)
+            .withColumn("as_of_batch", lit(batchId)).coalesce(1),
+          reportPath)
       }
       .start()
+
+  /** Per (source, tok) token counts of `batch`: the drift ledger's rows. */
+  private def tokenCounts(batch: DataFrame, textCol: String, sourceCol: String): DataFrame =
+    batch.select(col(sourceCol).as("source"),
+        explode(graft.ops.TextOps.tokens(col(textCol))).as("tok"))
+      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cs"))
 
   /** Incremental reweighting loop — the X6 mirror of
     * [[incrementalCurationPipeline]], closing the monitor→optimizer→
@@ -907,12 +793,12 @@ object StreamingOps {
     * domain weights, and the mixture resampler applies them to the
     * accreted corpus. Per micro-batch:
     *
-    *  1. *measure* — append three batch-stamped additive ledgers:
+    *  1. *measure* — accrete two additive ledgers ([[StateDir.accrete]]):
     *     (source, tok, cs) token counts (the [[incrementalDriftMonitor]]
-    *     ledger), (source, loss_sum, n) per-source loss statistics (the
+    *     ledger) and (source, loss_sum, n) per-source loss statistics (the
     *     sufficient statistic for the DoReMi domain loss — a mean is
     *     (Σloss, n)-reconstructible, exactly as the KL report is
-    *     count-reconstructible), and the raw docs themselves;
+    *     count-reconstructible); append the raw docs themselves;
     *  2. *optimize* — [[graft.ops.Curation.doremiFromStats]] on the
     *     accreted per-source stats (domains-sized table, corpus-tiny);
     *  3. *report* — the per-source drift KL joined with the learned
@@ -926,10 +812,8 @@ object StreamingOps {
     *     doc can become kept — keep-rates are corpus-level state, not
     *     per-row state.
     *
-    * Crash/replay contract: replayed batches re-append byte-identical
-    * batch-stamped ledger rows (dropDuplicates on the stamp key at read
-    * makes re-delivery idempotent — the [[incrementalDriftMonitor]]
-    * argument), and the doc ledger dedups on `idCol`.
+    * A replayed batch counts once in the accreted ledgers, and the doc
+    * ledger dedups on `idCol`.
     *
     * Maintain-incrementally equals compute-once-batch: ledger sums are
     * the same numbers the batch aggregates produce (counts exactly; the
@@ -944,56 +828,36 @@ object StreamingOps {
                                      resampledPath: String, checkpoint: String,
                                      eta: Double = 0.5, iters: Int = 3,
                                      alpha: Double = 0.5, klRoundDigits: Int = 4,
-                                     wRoundDigits: Int = 6,
-                                     compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
+                                     wRoundDigits: Int = 6): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        // 1. measure: three additive batch-stamped ledgers
-        batch.select(col(sourceCol).as("source"),
-            explode(graft.ops.TextOps.tokens(col(textCol))).as("tok"))
-          .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cs"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(countLedgerPath)
-        batch.groupBy(col(sourceCol).as("source"))
-          .agg(sum(lossCol).as("loss_sum"), count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(statsLedgerPath)
+        // 1. measure: two additive ledgers and the raw docs
+        val counts = StateDir.accrete(tokenCounts(batch, textCol, sourceCol),
+          countLedgerPath, batchId, Seq("source", "tok"))
+        val totals = StateDir.accrete(batch.groupBy(col(sourceCol).as("source"))
+            .agg(sum(lossCol).as("loss_sum"), count(lit(1)).as("n")),
+          statsLedgerPath, batchId, Seq("source"))
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(docLedgerPath)
-        // the two stat ledgers are additive → committed batches fold
-        // losslessly (the doc ledger is raw rows, not additive — it
-        // dedups on idCol at read instead)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-          compactLedger(spark, countLedgerPath, Seq("source", "tok"),
-            Seq("cs"), batchId)
-          compactLedger(spark, statsLedgerPath, Seq("source"),
-            Seq("loss_sum", "n"), batchId)
-        }
         // 2. optimize: weights from the accreted loss statistics
         val s = math.pow(10.0, wRoundDigits)
-        val stats = Parquet.read(spark, statsLedgerPath)
-          .dropDuplicates("batch_id", "source")
-          .groupBy(col("source").as(sourceCol))
-          .agg((floor(sum(col("loss_sum")) / sum(col("n")) * lit(s) + lit(0.5))
-            / lit(s)).as("domain_loss"),
-            sum(col("n")).as("n_docs"))
+        val stats = totals.select(col("source").as(sourceCol),
+          (floor(col("loss_sum") / col("n") * lit(s) + lit(0.5)) / lit(s)).as("domain_loss"),
+          col("n").as("n_docs"))
         val weights = graft.ops.Curation.doremiFromStats(stats, sourceCol,
           eta, iters, wRoundDigits)
         // 3. report: drift KL beside the weight it motivates
-        val counts = Parquet.read(spark, countLedgerPath)
-          .dropDuplicates("batch_id", "source", "tok")
-          .groupBy(col("source"), col("tok")).agg(sum(col("cs")).as("cs"))
-        writeAtomic(
+        StateDir.swap(
           graft.ops.TextOps.driftFromCounts(counts, alpha, klRoundDigits)
             .join(weights.withColumnRenamed(sourceCol, "source"), Seq("source"))
-            .withColumn("as_of_batch", lit(batchId)),
-          reportPath, coalesce1 = true)
+            .withColumn("as_of_batch", lit(batchId)).coalesce(1),
+          reportPath)
         // 4. apply: resample the accreted corpus with the learned weights
         val corpus = Parquet.read(spark, docLedgerPath)
           .dropDuplicates(idCol).drop("batch_id")
-        writeAtomic(
+        StateDir.swap(
           graft.ops.Curation.mixtureSampleBy(corpus, idCol, sourceCol, weights, "weight"),
           resampledPath)
       }
@@ -1001,8 +865,8 @@ object StreamingOps {
 
   /** Incremental DSIR selection — the streaming mirror of
     * [[graft.ops.Curation.dsirWeights]] + top-k: maintain the per-bucket
-    * (raw, target) token counts as ONE additive batch-stamped ledger
-    * (the λ table's sufficient statistic — a fixed `buckets`-sized key
+    * (raw, target) token counts as ONE additive ledger ([[StateDir.accrete]];
+    * the λ table's sufficient statistic — a fixed `buckets`-sized key
     * space, so the ledger is corpus-independent), accrete the raw docs,
     * and per micro-batch re-score the accreted corpus against the λ map
     * rebuilt from the accreted counts, overwriting the top-`topK`
@@ -1015,55 +879,43 @@ object StreamingOps {
     * the union of all batches — proven in StreamingSpec across ≥3
     * micro-batches. Re-scoring is recomputed, not accreted: new batches
     * move BOTH count tables, so every stored weight can shift (weights
-    * are corpus-level state, the mixture-resample argument).
-    *
-    * Crash/replay contract: replayed batches re-append byte-identical
-    * batch-stamped count rows (dropDuplicates on the stamp key at read),
-    * and the doc ledger dedups on `idCol`. */
+    * are corpus-level state, the mixture-resample argument). The doc
+    * ledger dedups on `idCol`. */
   def incrementalDsirSelect(docs: DataFrame, idCol: String, textCol: String,
                             targetPred: Column,
                             countLedgerPath: String, docLedgerPath: String,
                             selectedPath: String, checkpoint: String,
                             buckets: Int = 128, alpha: Double = 0.5,
-                            topK: Int = 100, roundDigits: Int = 4,
-                            compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
+                            topK: Int = 100,
+                            roundDigits: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        graft.ops.Curation.dsirBucketCounts(batch, textCol, targetPred, buckets)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(countLedgerPath)
+        val counts = StateDir.accrete(
+          graft.ops.Curation.dsirBucketCounts(batch, textCol, targetPred, buckets),
+          countLedgerPath, batchId, Seq("bucket"))
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(docLedgerPath)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactLedger(spark, countLedgerPath, Seq("bucket"),
-            Seq("cr", "ct"), batchId)
-        val counts = Parquet.read(spark, countLedgerPath)
-          .dropDuplicates("batch_id", "bucket")
-          .groupBy(col("bucket"))
-          .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
         val corpus = Parquet.read(spark, docLedgerPath)
           .dropDuplicates(idCol).drop("batch_id")
-        writeAtomic(
+        StateDir.swap(
           graft.ops.Curation.dsirWeightsFromCounts(corpus, textCol, counts,
               buckets, alpha, roundDigits)
             .orderBy(col("weight").desc, col(idCol))
-            .limit(topK),
-          selectedPath, coalesce1 = true)
+            .limit(topK).coalesce(1),
+          selectedPath)
       }
       .start()
 
   /** Incremental HyperLogLog cardinality monitor — the CDC mirror of
     * `x5_hll_distinct`: each micro-batch's register table
-    * ([[graft.ops.HyperLogLog.registers]]) appends batch-stamped to a
-    * durable ledger, and the per-group estimate report is rebuilt from
-    * the accreted bucket-wise MAX and atomically swapped at `reportPath`.
-    * The ledger is bounded at groups·2^p rows after each compaction
-    * (register maxes fold by max — associative, commutative AND
-    * idempotent, so replayed appends can't even double-count), making
-    * this the cheapest possible distinct-count state: no raw items, no
-    * fingerprint ledger, just the sketch.
+    * ([[graft.ops.HyperLogLog.registers]]) accretes to a durable ledger
+    * folded by bucket-wise MAX ([[StateDir.accrete]]), and the per-group
+    * estimate report is rebuilt from it and swapped in at `reportPath`.
+    * Register maxes are associative, commutative AND idempotent, which
+    * makes this the cheapest possible distinct-count state: no raw items,
+    * no fingerprint ledger, just the sketch.
     *
     * Maintain-incrementally equals compute-once-batch EXACTLY: registers
     * are integer maxes, so the accreted sketch — and therefore every
@@ -1074,26 +926,18 @@ object StreamingOps {
     * generator can't nest inside the hash expression. */
   def incrementalHllDistinct(items: DataFrame, groupCol: String, item: Column,
                              regLedgerPath: String, reportPath: String,
-                             checkpoint: String, p: Int = 8, window: Int = 20,
-                             compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
+                             checkpoint: String, p: Int = 8,
+                             window: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
     items.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.ops.HyperLogLog.registers(batch, groupCol, item, p, window)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(regLedgerPath)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactLedger(spark, regLedgerPath, Seq(groupCol, "bucket"),
-            Seq("m_j"), batchId, c => max(col(c)))
-        val regs = Parquet.read(spark, regLedgerPath)
-          .dropDuplicates("batch_id", groupCol, "bucket")
-          .groupBy(col(groupCol), col("bucket"))
-          .agg(max(col("m_j")).as("m_j"))
-        writeAtomic(
+        val regs = StateDir.accrete(
+          graft.ops.HyperLogLog.registers(batch, groupCol, item, p, window),
+          regLedgerPath, batchId, Seq(groupCol, "bucket"), c => max(col(c)))
+        StateDir.swap(
           graft.ops.HyperLogLog.estimate(regs, groupCol, p)
-            .withColumn("as_of_batch", lit(batchId)),
-          reportPath, coalesce1 = true)
+            .withColumn("as_of_batch", lit(batchId)).coalesce(1),
+          reportPath)
       }
       .start()
 
@@ -1108,9 +952,8 @@ object StreamingOps {
     *  - `vecLedgerPath`: one (id, v, bucket) row per ever-seen vector
     *    (the corpus side every new batch must score against — O(corpus),
     *    append-only, the same honest price as the dedup ledgers);
-    *  - `viewPath`: the top-k view itself, ≤ k rows per id, swapped
-    *    atomically per batch (staging+rename, a concurrent reader never
-    *    sees a partial view).
+    *  - `viewPath`: the top-k view itself, ≤ k rows per id, replaced per
+    *    batch by [[StateDir.swap]].
     *
     * Per micro-batch: bucket the batch, score it against itself AND both
     * directions against the ledger (bucket-keyed joins — never
@@ -1139,7 +982,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         val newAll = Similarity.lshBucketFrame(batch, idCol, vecCol, bits)
         // the ledger holds `newAll` rows, the view `newPairs` rows
-        val seen = readState(spark, vecLedgerPath, newAll.schema)
+        val seen = StateDir.read(spark, vecLedgerPath, newAll.schema)
         // replay guard: a crash-redelivered batch is already in the ledger
         val newB = seen.fold(newAll)(sn =>
           newAll.join(sn.select(col("id")), Seq("id"), "left_anti")).cache()
@@ -1151,7 +994,7 @@ object StreamingOps {
           .where(col("cosine") >= lit(threshold))
           .cache()
         val touched = newPairs.select(col("id")).distinct()
-        val oldView = readState(spark, viewPath, newPairs.schema)
+        val oldView = StateDir.read(spark, viewPath, newPairs.schema)
           .getOrElse(newPairs.limit(0))
         // merge is bounded: ≤ k existing rows + this batch's pairs per id
         val rk = Window.partitionBy(col("id"))
@@ -1168,7 +1011,7 @@ object StreamingOps {
           .withColumn("__rk", row_number().over(rk))
           .where(col("__rk") <= k).drop("__rk")
         val untouched = oldView.join(touched, Seq("id"), "left_anti")
-        writeAtomic(untouched.unionByName(updated), viewPath)
+        StateDir.swap(untouched.unionByName(updated), viewPath)
         newB.write.mode("append").parquet(vecLedgerPath)
         newPairs.unpersist(); newB.unpersist(): Unit
       }
@@ -1204,8 +1047,9 @@ object StreamingOps {
   }
 
   /** X8 — incrementally maintained PageRank: stateful cross-batch edge
-    * pairing → additive (src, dst) count ledger → rank recompute on the
-    * compacted edge table each batch, atomically swapped at `ranksPath`.
+    * pairing → additive (src, dst) count ledger ([[StateDir.accrete]]) →
+    * rank recompute on the folded edge table each batch, swapped in at
+    * `ranksPath`.
     *
     * The split of work is the scale design: the per-batch cost of the
     * PAIRING is O(batch) with one long of state per live user, the
@@ -1219,27 +1063,22 @@ object StreamingOps {
     * (StreamingSpec, ≥3 micro-batches). */
   def incrementalPagerank(events: Dataset[StateEvent], edgeLedgerPath: String,
                           ranksPath: String, checkpoint: String,
-                          iters: Int = 5, compactEvery: Int = 8)
+                          iters: Int = 5)
       : org.apache.spark.sql.streaming.StreamingQuery =
     statefulTransitionEdges(events).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[EdgeOut], batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(edgeLedgerPath)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactLedger(spark, edgeLedgerPath, Seq("src", "dst"), Seq("n"), batchId)
-        val edges = Parquet.read(spark, edgeLedgerPath)
-          .dropDuplicates("batch_id", "src", "dst")
-          .groupBy(col("src"), col("dst")).agg(sum(col("n")).as("weight"))
+        val edges = StateDir.accrete(
+            batch.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n")),
+            edgeLedgerPath, batchId, Seq("src", "dst"))
+          .withColumnRenamed("n", "weight")
         // scoped cache handle: the recompute re-caches the graph frames
         // every batch, so the unmanaged session-lifetime default would
         // accrete CacheManager entries forever on a long-lived stream
         val caches = new graft.ops.DedupCaches
-        try writeAtomic(
+        try StateDir.swap(
           graft.ops.GraphOps.pagerank(edges, iters = iters, caches = caches)
-            .withColumn("as_of_batch", lit(batchId)), ranksPath, coalesce1 = true)
+            .withColumn("as_of_batch", lit(batchId)).coalesce(1), ranksPath)
         finally caches.unpersistAll()
       }
       .start()
@@ -1248,7 +1087,7 @@ object StreamingOps {
     * ONCE into an append-only (doc_id, y, bucket, x) feature ledger
     * (per-doc rows are replay-idempotent — dedup by (doc_id, bucket)
     * suppresses re-delivery), and the k-step GD retrain runs on the
-    * accreted features per batch, atomically swapped at `weightsPath`.
+    * accreted features per batch, swapped in at `weightsPath`.
     * Featurization (the tokenizing scan — the expensive part at 100 TB)
     * is paid once per document; only the bucket-table-sized training
     * loop re-runs. Because [[graft.ops.TextOps.trainFromFeatures]] is a
@@ -1270,11 +1109,11 @@ object StreamingOps {
         val feats = Parquet.read(spark, featLedgerPath)
           .dropDuplicates("doc_id", "bucket")
         val caches = new graft.ops.DedupCaches
-        try writeAtomic(
+        try StateDir.swap(
           graft.ops.TextOps.trainFromFeatures(feats, buckets, iters,
               caches = caches)
-            .withColumn("as_of_batch", lit(batchId)),
-          weightsPath, coalesce1 = true)
+            .withColumn("as_of_batch", lit(batchId)).coalesce(1),
+          weightsPath)
         finally caches.unpersistAll()
       }
       .start()
@@ -1312,7 +1151,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         // stage 1 — exact dedup against the durable fingerprint ledger
         val d1 = firstUnseen(batch, idCol, textCol,
-          readStateOrEmpty(spark, fpLedgerPath, FpLedger)).cache()
+          fpLedger(spark, fpLedgerPath)).cache()
         // stage 2 — decontaminate vs the read-only bench ledger (a missing
         // path must fail the batch, not silently pass everything as clean)
         val bench = Parquet.read(spark, benchLedgerPath)
@@ -1863,7 +1702,7 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val pts = batch.select(col(idCol).cast("long").as("pid"), col(vecCol))
         // the code table's pid column (this applier writes the table)
-        val fresh = readState(batch.sparkSession, codesPath,
+        val fresh = StateDir.read(batch.sparkSession, codesPath,
             StructType(Seq(StructField("pid", LongType))))
           .fold(pts)(codes => pts.join(codes.distinct(), Seq("pid"), "left_anti"))
         graft.ops.Similarity.pqEncode(fresh, "pid", vecCol, m, dim, codebooks)
@@ -1902,66 +1741,16 @@ object StreamingOps {
       .start()
 
   /** Incremental size-balanced shard accretion — the CDC mirror of
-    * [[graft.ops.Curation.shardManifest]]: documents stream in; each
-    * micro-batch is first balanced WITHIN itself by the batch op
-    * (round-robin over (size DESC, id) — batch-pile i carries the i-th
-    * largest batch total, by the op's telescoping bound), then the pile
-    * ranks map onto the INVERTED current shard totals — largest pile
-    * onto lightest shard, the greedy-LPT step at pile granularity — the
-    * manifest rows append, and the S-row totals ledger rewrites.
+    * [[graft.ops.Curation.shardManifest]], committed exactly once per
+    * batch: documents stream in; each micro-batch is first balanced WITHIN
+    * itself by the batch op (round-robin over (size DESC, id) — batch-pile
+    * i carries the i-th largest batch total, by the op's telescoping
+    * bound), then the pile ranks map onto the INVERTED current shard
+    * totals — largest pile onto lightest shard, the greedy-LPT step at
+    * pile granularity. Durable state is the S-row (shard, total) ledger,
+    * driver-tiny at any corpus size.
     *
-    * Scale shape: durable state is exactly S (shard-count) rows of
-    * (shard, total) — driver-tiny at any corpus size; the manifest is
-    * the appended output, never re-read. Per batch: the batch op's
-    * level-prefix rank (no global window) + one S-row broadcast-mapped
-    * projection. Write order is manifest-first, ledger-second — a crash
-    * between them replays the batch with stale totals (duplicate
-    * manifest rows: at-least-once, the same contract as
-    * [[incrementalExactDedup]]'s corpus append); reversing the order
-    * would silently skew totals instead, which is worse because it is
-    * invisible. Exactly-once needs an atomic manifest+ledger commit via
-    * a transactional table format. */
-  def incrementalShardAssign(docs: DataFrame, idCol: String, sizeCol: String,
-                             shards: Int, manifestPath: String, ledgerPath: String,
-                             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // S rows — driver-side by design (same class as a broadcast dim)
-        val totals: Map[Long, Long] =
-          readState(spark, ledgerPath, StructType(Seq(
-              StructField("shard", LongType), StructField("total", LongType))))
-            .fold((0L until shards.toLong).map(_ -> 0L).toMap)(
-              _.as[(Long, Long)].collect().toMap)
-        // batch-internal balance (scale-safe rank decomposition), then
-        // pile i (i-th largest batch total) → i-th lightest shard
-        val piles = graft.ops.Curation.shardManifest(batch, idCol, col(sizeCol), shards)
-        val lightestFirst = totals.toSeq.sortBy { case (sh, t) => (t, sh) }.map(_._1)
-        val mapping = lightestFirst.zipWithIndex
-          .map { case (sh, pile) => (pile.toLong, sh) }.toDF("shard", "__target")
-        val assigned = piles.join(broadcast(mapping), Seq("shard"))
-          .select(col("doc_id"), col("n_tokens"), col("__target").as("shard"))
-          .cache()
-        assigned.write.mode("append").parquet(manifestPath)
-        val delta = assigned.groupBy(col("shard"))
-          .agg(sum(col("n_tokens")).as("t")).as[(Long, Long)].collect().toMap
-        val next = totals.map { case (sh, t) => (sh, t + delta.getOrElse(sh, 0L)) }
-        next.toSeq.sortBy(_._1).toDF("shard", "total")
-          .coalesce(1).write.mode("overwrite").parquet(ledgerPath)
-        assigned.unpersist(): Unit
-      }
-      .start()
-
-  /** EXACTLY-ONCE variant of [[incrementalShardAssign]] — the worked
-    * example of closing a foreachBatch crash window with a staged
-    * atomic-rename commit, no transactional table format required.
-    *
-    * The at-least-once form writes manifest-first, ledger-second; a
-    * crash between the two replays the batch against stale totals and
-    * duplicates its manifest rows. Here BOTH artifacts of a batch live
-    * inside ONE commit directory:
+    * Both artifacts of a batch live inside ONE commit directory:
     *
     *   root/commit-<epoch>/manifest/   the batch's assignment rows
     *   root/commit-<epoch>/ledger/     the S-row totals AFTER the batch
@@ -1979,8 +1768,7 @@ object StreamingOps {
     * current totals are the ledger of the
     * highest committed epoch ([[txnShardTotals]]). The rename-commit
     * pattern assumes atomic directory rename (HDFS, POSIX; on S3 use a
-    * committer or table format). The at-least-once form stays the
-    * default — it needs no directory-per-batch layout. */
+    * committer or table format). */
   def incrementalShardAssignTxn(docs: DataFrame, idCol: String, sizeCol: String,
                                 shards: Int, rootPath: String,
                                 checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -2013,9 +1801,8 @@ object StreamingOps {
         .as[(Long, Long)].collect().toMap
       case None => (0L until shards.toLong).map(_ -> 0L).toMap
     }
-    // same balancing as the at-least-once form: batch-internal pile
-    // ranks onto the inverted committed totals (greedy LPT at pile
-    // granularity)
+    // batch-internal pile ranks onto the inverted committed totals
+    // (greedy LPT at pile granularity)
     val piles = graft.ops.Curation.shardManifest(batch, idCol, col(sizeCol), shards)
     val lightestFirst = totals.toSeq.sortBy { case (sh, t) => (t, sh) }.map(_._1)
     val mapping = lightestFirst.zipWithIndex

@@ -29,4 +29,15 @@ object GraftPlanBridge {
     * (`SparkContext.getActive` is private[spark]). */
   def activeContext: Option[org.apache.spark.SparkContext] =
     org.apache.spark.SparkContext.getActive
+
+  /** Releases `rdd`'s persisted blocks. A locally-checkpointed RDD is
+    * released through `SparkContext.unpersistRDD` (private[spark]), which
+    * does what `RDD.unpersist` does without its warning that the RDD's
+    * truncated lineage cannot be recomputed: each query's checkpoints are
+    * dead once the query is done. The check is `RDD.isLocallyCheckpointed`'s
+    * own, which is private[rdd]. */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false): Unit
 }

@@ -42,6 +42,73 @@ class EngineSpec extends SparkSpec {
     assert(callers == Seq("src/main/scala/graft/Engine.scala"), callers.mkString(", "))
   }
 
+  test("Hadoop rename/delete under graft.streaming only in StateDir and the commit protocols") {
+    // a new applier keeps its state through StateDir, not a hand-rolled swap
+    val allowed = Set("shardAssignCommit", "compactAnnIndex", "resplitHotCells", "recoverResplit")
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val call = """\.(rename|delete)\(""".r
+    val files = Files.list(Paths.get("src/main/scala/graft/streaming")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("StateDir.scala")), s"scan found ${files.mkString(", ")}")
+    val calls = files.filterNot(_.endsWith("StateDir.scala")).flatMap { f =>
+      var in = ""
+      Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
+        member.findFirstMatchIn(line).foreach(m => in = m.group(1))
+        call.findAllMatchIn(line).map(_ => (in, s"${f.getFileName}:${i + 1} in $in"))
+      }
+    }
+    assert(allowed.forall(a => calls.exists(_._1 == a)), s"scan missed a protocol: $calls")
+    val offenders = calls.filterNot(c => allowed(c._1)).map(_._2)
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("isolate releases a locally-checkpointed RDD without Spark's lineage warning") {
+    val sc = spark.sparkContext
+    def checkpointed() = {
+      val rdd = sc.parallelize(1 to 10, 2).map(_ + 1).localCheckpoint()
+      rdd.count()
+      rdd
+    }
+    val cached = sc.parallelize(1 to 10, 2).cache()
+    cached.count()
+    checkpointed()
+    val warned = "was locally checkpointed"
+    // the capture sees the warning RDD.unpersist logs ...
+    val direct = rddWarnings(checkpointed().unpersist(): Unit)
+    assert(direct.exists(_.contains(warned)), direct.mkString(" | "))
+    // ... and isolate logs none of them
+    val lines = rddWarnings(Engine.isolate(spark))
+    assert(sc.getPersistentRDDs.isEmpty, sc.getPersistentRDDs.keys.mkString(", "))
+    assert(!lines.exists(_.contains(warned)), lines.mkString(" | "))
+  }
+
+  /** The WARN lines the `org.apache.spark.rdd` loggers log while `body` runs. */
+  private def rddWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = "org.apache.spark.rdd"
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("rdd-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage): Unit
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    Configurator.setLevel(name, Level.WARN)
+    val config = ctx.getConfiguration.getLoggerConfig(name)
+    config.setAdditive(false)
+    config.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      config.removeAppender(capture.getName)
+      config.setAdditive(true)
+      Configurator.setLevel(name, Level.ERROR)
+      capture.stop()
+    }
+    lines.asScala.toSeq
+  }
+
   test("the test session carries every Engine conf entry") {
     assertCarries(spark, Engine.conf(cores = 4))
     assert(spark.sparkContext.master == "local[4]")

@@ -16,7 +16,7 @@ import graft.streaming.StreamingOps.StateEvent
   *    a future stateful refactor (a dropDuplicates watermark, a
   *    mapGroupsWithState dedup) cannot silently become HDFS-provider-only.
   *
-  *  - torn-window crash fixtures for the two writeAtomic/rename mirrors
+  *  - torn-window crash fixtures for the two staged-rename protocols
   *    that had replay tests but not the window-specific kill: the shard
   *    txn's stage-then-rename (crash DURING staging leaves `.tmp`
   *    residue) and compactAnnIndex's two-rename swap (crash BETWEEN the
@@ -51,7 +51,7 @@ class Round20StreamingSpec extends SparkSpec {
     }
     val mem = MemoryStream[StateEvent]
     val q = StreamingOps.incrementalPagerank(mem.toDS(), ledger, ranks, ckpt,
-      iters = 5, compactEvery = 2)
+      iters = 5)
     events.grouped(10).foreach { chunk =>
       mem.addData(chunk: _*)
       q.processAllAvailable()
@@ -99,7 +99,7 @@ class Round20StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(String, String)]
     val q = StreamingOps.incrementalHllDistinct(
       mem.toDF().toDF("source", "tok"), "source", col("tok"),
-      ledger, report, ckpt, compactEvery = 2)
+      ledger, report, ckpt)
     full.grouped((full.size + 1) / 2).foreach { chunk =>
       mem.addData(chunk: _*)
       q.processAllAvailable()
