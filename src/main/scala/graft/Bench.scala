@@ -68,9 +68,12 @@ object Bench {
         Engine.isolate(spark)
         val t0 = System.nanoTime()
         // A crashing query must not vanish into a fast-looking timing:
-        // record it in `failed`, surfaced in the output JSON.
+        // record it in `failed`, surfaced in the output JSON, and say why
+        // on stderr the first time (stdout carries only the JSON line).
         try force(fn(spark, sfDir))
-        catch { case _: Throwable => failed += name }
+        catch { case e: Throwable =>
+          if (failed.add(name)) System.err.println(s"[bench] $name failed: $e")
+        }
         name -> (System.nanoTime() - t0) / 1e9
       }
     // three passes, per-query MIN: isolates JIT/GC/machine-load noise.

@@ -1,9 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, FileContext, FileSystem}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.spark.sql.SparkSession
 
@@ -39,7 +42,33 @@ class EngineSpec extends SparkSpec {
     val callers = files.filter(p => Files.readString(p).contains(needle))
       .map((p: Path) => p.toString.replace('\\', '/'))
     assert(files.size > 50, s"scan found only ${files.size} files — wrong working dir?")
-    assert(callers == Seq("src/main/scala/graft/Engine.scala"), callers.mkString(", "))
+    // this suite's binding test builds one bare session, as perfbench does
+    assert(callers.sorted == Seq("src/main/scala/graft/Engine.scala",
+      "src/test/scala/graft/EngineSpec.scala"), callers.mkString(", "))
+  }
+
+  test("file: resolves to graft.fs for a bare Configuration, a bare builder and Engine.session") {
+    val file = URI.create("file:///")
+    def assertGraft(conf: Configuration, who: String): Unit = {
+      assert(FileSystem.getFileSystemClass("file", conf) == classOf[graft.fs.LocalFileSystem], who)
+      assert(FileSystem.get(file, conf).getClass == classOf[graft.fs.LocalFileSystem], who)
+      val local = FileSystem.getLocal(conf)
+      assert(local.getClass == classOf[graft.fs.LocalFileSystem], who)
+      assert(local.getRaw.getClass == classOf[graft.fs.RawLocalFileSystem], who)
+      val afs = FileContext.getLocalFSFileContext(conf).getDefaultFileSystem
+      assert(afs.getClass == classOf[graft.fs.LocalFs], who)
+      assert(afs.asInstanceOf[ChecksumFs].getRawFs.getClass.getName == "graft.fs.RawLocalFs", who)
+    }
+    assertGraft(new Configuration(), "new Configuration()")
+    // no Engine conf: the binding comes from core-site.xml on the classpath
+    val bare = fresh(SparkSession.builder().getOrCreate())
+    assert(bare ne spark)
+    assertGraft(bare.sparkContext.hadoopConfiguration, "bare builder, SparkContext")
+    assertGraft(bare.sessionState.newHadoopConf(), "bare builder, session")
+    val engine = fresh(Engine.session(cores = 4))
+    assertGraft(engine.sessionState.newHadoopConf(), "Engine.session")
+    // one place binds file:, and it is not the session conf
+    assert(!Engine.conf(cores = 4).exists(_._1.startsWith("spark.hadoop.fs.")), Engine.conf(4))
   }
 
   test("Hadoop rename/delete under graft.streaming only in StateDir and the commit protocols") {

@@ -3,7 +3,7 @@ package graft
 import java.io.IOException
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,12 +11,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.streaming.{StateDir, StreamingOps}
 
-/** The local file system under the `crashfs:` scheme. A test arms one
+/** The engine's local file system (`graft.fs`, the class that serves
+  * `file:`) under the `crashfs:` scheme. A test arms one
   * trigger on a rename or delete; when it fires, the operation either
   * fails (the rename returns false, once) or crashes: it throws, and so
   * does every later rename and delete until [[CrashFs.reset]], as if the
   * process had died there. */
-class CrashFs extends RawLocalFileSystem {
+class CrashFs extends graft.fs.RawLocalFileSystem {
   override def getUri: URI = CrashFs.Uri
   override def getScheme: String = CrashFs.Uri.getScheme
   override def rename(src: Path, dst: Path): Boolean =
