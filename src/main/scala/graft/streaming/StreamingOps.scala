@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftPlanBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
   StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Parquet
 
@@ -305,8 +306,10 @@ object StreamingOps {
     * (valid_from, event_id), taken as a windowed max over the key; the
     * filter below drops rows at or before it; `row_number` continues the
     * open row's version and `lead` closes each interval. The result is
-    * cached once and both outputs are cut from it: closed rows
-    * (`valid_to` set) append to history, open rows become the snapshot.
+    * [[persisted]] and both outputs are cut from it: closed rows
+    * (`valid_to` set) append to history while open rows are staged as the
+    * next snapshot, which is installed once the history append has
+    * committed ([[StateDir.afterCommit]]).
     * Trade-off: snapshot rows of keys the batch does not touch go through
     * the key exchange too (they come out unchanged), where a semi/anti
     * join split would have filtered them against the broadcast batch keys
@@ -325,12 +328,14 @@ object StreamingOps {
     * re-close an interval) and rejects out-of-order changes, the standard
     * SCD2-applier contract (late rows would need a history rewrite).
     *
-    * Failure window: the history append and the snapshot swap are two
-    * writes. A crash BETWEEN them (history written, snapshot still old)
+    * Failure window: the history append and the snapshot install are two
+    * commits. A crash BETWEEN them (history written, snapshot still old)
     * makes the retry re-append that batch's closed rows — at-least-once on
-    * `historyPath`, exact on `currentPath`. Closed rows are unique by
-    * (key, version), so readers needing exactly-once semantics without a
-    * transactional table format dedup on that pair. The snapshot is kept
+    * `historyPath`, exact on `currentPath`; a crash while the snapshot is
+    * staged leaves the old snapshot live, so the retry may re-append too.
+    * Closed rows are unique by (key, version), so readers needing
+    * exactly-once semantics without a transactional table format dedup on
+    * that pair. The snapshot is kept
     * under the [[StateDir]] contract. */
   def incrementalScd2(changes: DataFrame, keyCol: String,
                       currentPath: String, historyPath: String,
@@ -364,11 +369,12 @@ object StreamingOps {
             (row_number().over(w).cast(LongType) + coalesce(col("__base") - 1L, lit(0L)))
               .as("version"),
             lead(col("valid_from"), 1).over(w).as("valid_to"))
-          .cache()
-        versioned.where(col("valid_to").isNotNull)
-          .write.mode("append").parquet(historyPath)
-        StateDir.swap(versioned.where(col("valid_to").isNull).drop("valid_to"), currentPath)
-        versioned.unpersist(): Unit
+        persisted(versioned) { v =>
+          StateDir.afterCommit(v.where(col("valid_to").isNull).drop("valid_to"), currentPath,
+              append = false) {
+            v.where(col("valid_to").isNotNull).write.mode("append").parquet(historyPath)
+          }
+        }
       }
       .start()
 
@@ -418,17 +424,21 @@ object StreamingOps {
     *   broadcast fingerprints: 0.38 vs 0.47 s at 300 rows, 0.58 vs 0.59 s
     *   at 1e5, 1.18 vs 0.59 s at 1e6 — the broadcast is one more job that
     *   must finish before the exchange starts.
-    * The result is cached once and feeds both appends.
+    * The result is [[persisted]] and feeds both appends: the corpus
+    * append runs while the fingerprints are staged beside the ledger, and
+    * they are moved in once the corpus append has committed
+    * ([[StateDir.afterCommit]], a staged append).
     *
     * The ledger row is 32 hex chars — at 100 TB it is the compacted,
     * bucketable state table this job shares across restarts (checkpoint
     * restores the stream position; the ledger makes the dedup decision
-    * durable). It is read under the [[StateDir]] contract. A failed batch
+    * durable). It is kept under the [[StateDir]] contract. A failed batch
     * can replay after the corpus append — at-least-once on the corpus
     * sink. Exactly-once needs an ATOMIC commit of corpus + ledger (a
-    * transactional table format); merely reordering the writes
-    * ledger-first would turn crash-replays into silent data LOSS (fp
-    * durably "seen", document never appended).
+    * transactional table format); letting a fingerprint become visible
+    * before its corpus row — a ledger-first order, or a staged append
+    * installed by the crash repair — would turn crash-replays into silent
+    * data LOSS (fp durably "seen", document never appended).
     * Returns the started query. */
   def incrementalExactDedup(docs: DataFrame, idCol: String, textCol: String,
                             corpusPath: String, ledgerPath: String,
@@ -436,11 +446,12 @@ object StreamingOps {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val fresh = firstUnseen(batch, idCol, textCol, fpLedger(batch.sparkSession, ledgerPath))
-          .cache()
-        fresh.drop("fp").write.mode("append").parquet(corpusPath)
-        fresh.select(col("fp")).write.mode("append").parquet(ledgerPath)
-        fresh.unpersist(): Unit
+        val spark = batch.sparkSession
+        persisted(firstUnseen(batch, idCol, textCol, fpLedger(spark, ledgerPath))) { fresh =>
+          StateDir.afterCommit(fresh.select(col("fp")), ledgerPath, append = true) {
+            fresh.drop("fp").write.mode("append").parquet(corpusPath)
+          }
+        }
       }
       .start()
 
@@ -453,6 +464,17 @@ object StreamingOps {
 
   private def empty(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** Runs `body` over `df`'s rows persisted as they are first computed
+    * ([[org.apache.spark.sql.GraftPlanBridge.persisted]]), and releases
+    * them after. The first action's job fills the store, where `.cache()`
+    * under AQE's `canChangeCachedPlanOutputPartitioning` fills it in a job
+    * of its own before that action can start; a lost block is recomputed
+    * from the lineage either way. */
+  private[graft] def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val (rows, rdd) = GraftPlanBridge.persisted(df, StorageLevel.MEMORY_AND_DISK)
+    try body(rows) finally GraftPlanBridge.unpersist(rdd)
+  }
 
   /** `batch` plus its `fp` column, cut to the lowest-id document of every
     * fingerprint that `seen` (a fingerprint ledger) does not hold — the
@@ -1130,8 +1152,9 @@ object StreamingOps {
     *     never shuffles — grams broadcast);
     *  3. the Gopher repetition gate in integer form (5·dup_grams ≤ grams,
     *     n_toks ≥ 5 — stateless projection+filter, identical to x7's).
-    * Survivors append to the corpus, then stage 1's first-seen
-    * fingerprints append to the ledger (corpus-first crash ordering, see
+    * Survivors append to the corpus while stage 1's first-seen
+    * fingerprints are staged beside the ledger, and those move in once
+    * the corpus append has committed (corpus-first crash ordering, see
     * [[incrementalExactDedup]] — at-least-once on the corpus sink).
     *
     * Batch-parity: stages 2-3 are deterministic functions of the TEXT,
@@ -1150,24 +1173,24 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
         // stage 1 — exact dedup against the durable fingerprint ledger
-        val d1 = firstUnseen(batch, idCol, textCol,
-          fpLedger(spark, fpLedgerPath)).cache()
-        // stage 2 — decontaminate vs the read-only bench ledger (a missing
-        // path must fail the batch, not silently pass everything as clean)
-        val bench = Parquet.read(spark, benchLedgerPath)
-        val dirty = graft.ops.TextOps.gramHashes(d1, idCol, textCol, n)
-          .join(broadcast(bench), "gh")
-          .select(col("doc_id").as("__dirty")).distinct()
-        val d2 = d1.join(dirty, d1(idCol) === col("__dirty"), "left_anti")
-        // stage 3 — integer-form repetition gate (same predicate as x7)
-        val rep = graft.ops.TextOps.repetitionStats(d2, idCol, textCol, n = 2)
-          .where(col("n_dup_grams") * lit(5) <= col("n_grams")
-            && col("n_toks") >= 5)
-          .select(col("doc_id").as("__keep"))
-        val survivors = d2.join(rep, d2(idCol) === col("__keep"), "left_semi")
-        survivors.drop("fp").write.mode("append").parquet(corpusPath)
-        d1.select(col("fp")).write.mode("append").parquet(fpLedgerPath)
-        d1.unpersist(): Unit
+        persisted(firstUnseen(batch, idCol, textCol, fpLedger(spark, fpLedgerPath))) { d1 =>
+          // stage 2 — decontaminate vs the read-only bench ledger (a missing
+          // path must fail the batch, not silently pass everything as clean)
+          val bench = Parquet.read(spark, benchLedgerPath)
+          val dirty = graft.ops.TextOps.gramHashes(d1, idCol, textCol, n)
+            .join(broadcast(bench), "gh")
+            .select(col("doc_id").as("__dirty")).distinct()
+          val d2 = d1.join(dirty, d1(idCol) === col("__dirty"), "left_anti")
+          // stage 3 — integer-form repetition gate (same predicate as x7)
+          val rep = graft.ops.TextOps.repetitionStats(d2, idCol, textCol, n = 2)
+            .where(col("n_dup_grams") * lit(5) <= col("n_grams")
+              && col("n_toks") >= 5)
+            .select(col("doc_id").as("__keep"))
+          val survivors = d2.join(rep, d2(idCol) === col("__keep"), "left_semi")
+          StateDir.afterCommit(d1.select(col("fp")), fpLedgerPath, append = true) {
+            survivors.drop("fp").write.mode("append").parquet(corpusPath)
+          }
+        }
       }
       .start()
 

@@ -16,19 +16,22 @@ import graft.{Engine, SparkEntry}
   * concurrent jobs (broadcasts, subqueries) count once — its driver gap,
   * wall minus job time: analysis, planning and driver work between jobs —
   * and its build: the time to construct the DataFrame and the jobs that
-  * ran before the noop write started. A last line totals the columns over
-  * the queries that ran. A failing query prints its exception class and
-  * message instead.
+  * ran before the noop write started. Next to them, `compiles` counts the
+  * codegen classes Janino compiled over all three runs: code Spark's
+  * codegen cache still holds compiles none, so a query whose later runs
+  * compile again is losing its classes to eviction. A last line totals the
+  * columns over the queries that ran. A failing query prints its exception
+  * class and message instead.
   *
   * Usage: tools/run_main.sh graft.tools.Probe <sfDir> <query> [query...]
   */
 object Probe {
   /** One run; times in seconds. */
   final case class Run(wall: Double, jobs: Int, tasks: Int, jobTime: Double,
-                       build: Double = 0.0, buildJobs: Int = 0) {
+                       build: Double = 0.0, buildJobs: Int = 0, compiles: Long = 0) {
     def gap: Double = wall - jobTime
     def +(o: Run): Run = Run(wall + o.wall, jobs + o.jobs, tasks + o.tasks,
-      jobTime + o.jobTime, build + o.build, buildJobs + o.buildJobs)
+      jobTime + o.jobTime, build + o.build, buildJobs + o.buildJobs, compiles + o.compiles)
   }
 
   /** Total length of the union of `intervals` clipped to `[t0, t1]`. */
@@ -82,12 +85,13 @@ object Probe {
     sc.addSparkListener(jobs)
     def row(name: String, r: Run): Unit =
       println(f"$name%-32s ${r.wall}%8.3f ${r.jobs}%5d ${r.tasks}%6d " +
-        f"${r.jobTime}%8.3f ${r.gap}%8.3f ${r.buildJobs}%10d ${r.build}%8.3f")
+        f"${r.jobTime}%8.3f ${r.gap}%8.3f ${r.buildJobs}%10d ${r.build}%8.3f ${r.compiles}%8d")
     println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%5s ${"tasks"}%6s ${"job_s"}%8s " +
-      f"${"gap_s"}%8s ${"build_jobs"}%10s ${"build_s"}%8s")
+      f"${"gap_s"}%8s ${"build_jobs"}%10s ${"build_s"}%8s ${"compiles"}%8s")
     val ran = args.tail.flatMap { name =>
       try {
         val query = SparkEntry.queries(name)
+        val c0 = GraftPlanBridge.codegenCompilations
         val best = (1 to 3).map { _ =>
           Engine.isolate(spark)
           GraftPlanBridge.drainListeners(sc)
@@ -99,7 +103,7 @@ object Probe {
           val t1 = System.currentTimeMillis()
           GraftPlanBridge.drainListeners(sc)
           jobs.run(t0, tb, t1)
-        }.minBy(_.wall)
+        }.minBy(_.wall).copy(compiles = GraftPlanBridge.codegenCompilations - c0)
         row(name, best)
         Some(best)
       } catch { case e: Throwable =>

@@ -30,6 +30,35 @@ object GraftPlanBridge {
   def activeContext: Option[org.apache.spark.SparkContext] =
     org.apache.spark.SparkContext.getActive
 
+  /** `df`'s rows backed by their own RDD persisted at `level`, and that
+    * RDD. `toRdd` runs the jobs that cut `df`'s plan into stages (shuffle
+    * maps, broadcasts) now; the final stage runs inside the first action
+    * on the returned DataFrame, which stores the rows as it computes them,
+    * so no separate job fills a cache. The RDD keeps its lineage: a lost
+    * block is recomputed, as with `Dataset.persist`, where a local
+    * checkpoint's lost block would fail the job. The caller unpersists it. */
+  def persisted(df: DataFrame, level: org.apache.spark.storage.StorageLevel)
+      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+    (classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
+  }
+
+  /** Runs `body` on `exec` with this thread's session, local properties
+    * (job group, job tags, SQL execution id) and artifact state
+    * (`SQLExecution.withThreadLocalCaptured`, whose session is the classic
+    * one): a job it starts is cancelled with the caller's job group. */
+  def captured[T](spark: SparkSession, exec: java.util.concurrent.ExecutorService)
+                 (body: => T): java.util.concurrent.CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], exec)(body)
+
+  /** Whole-stage and expression classes compiled by Janino in this JVM so
+    * far (the count of `CodegenMetrics.METRIC_COMPILATION_TIME`). */
+  def codegenCompilations: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Releases `rdd`'s persisted blocks. A locally-checkpointed RDD is
     * released through `SparkContext.unpersistRDD` (private[spark]), which
     * does what `RDD.unpersist` does without its warning that the RDD's

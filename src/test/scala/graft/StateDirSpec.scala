@@ -16,12 +16,15 @@ import graft.streaming.{StateDir, StreamingOps}
   * trigger on a rename or delete; when it fires, the operation either
   * fails (the rename returns false, once) or crashes: it throws, and so
   * does every later rename and delete until [[CrashFs.reset]], as if the
-  * process had died there. */
+  * process had died there. A test can also hold renames
+  * ([[CrashFs.hold]]). */
 class CrashFs extends graft.fs.RawLocalFileSystem {
   override def getUri: URI = CrashFs.Uri
   override def getScheme: String = CrashFs.Uri.getScheme
-  override def rename(src: Path, dst: Path): Boolean =
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashFs.hold(src.toUri.getPath, dst.toUri.getPath)
     CrashFs.admit("rename", src, dst) && super.rename(src, dst)
+  }
   override def delete(p: Path, recursive: Boolean): Boolean = {
     CrashFs.admit("delete", p, p)
     super.delete(p, recursive)
@@ -33,6 +36,11 @@ object CrashFs {
 
   /** `(op, src, dst)` of the operation to stop, and whether it crashes. */
   final case class Trigger(hit: (String, String, String) => Boolean, crash: Boolean)
+
+  /** Runs before every rename with its source and destination paths,
+    * outside the trigger's lock: a test that must keep a rename from
+    * happening before some event waits here. */
+  @volatile var hold: (String, String) => Unit = (_, _) => ()
 
   @volatile private var trigger: Option[Trigger] = None
   @volatile private var crashed = false
@@ -89,11 +97,21 @@ class StateDirSpec extends SparkSpec {
         parentOf(p) == parentOf(live) && nameOf(p).startsWith("." + nameOf(live))
     }, crash = true)
 
+  /** The crash (or with `crash = false`, the failed rename) while a write
+    * to the directory `out` commits: the job commit moves a part file out
+    * of its `_temporary` directory. (A crash in a task's commit is reported
+    * as its abort's failure, a delete after the crash.) */
+  private def inJobCommit(out: String, crash: Boolean = true): CrashFs.Trigger =
+    CrashFs.Trigger((op, src, dst) => op == "rename" && src.startsWith(s"$out/_temporary/") &&
+      !dst.contains("/_temporary/"), crash)
+
   /** Feeds `batches` to the query `start` builds; with `crash`, batch
-    * `crashAt` fails at the trigger and the query restarts from the same
-    * checkpoint and source, so that batch replays under the same epoch. */
+    * `crashAt` fails at the trigger, with a cause whose message starts with
+    * `failure`, and the query restarts from the same checkpoint and
+    * source, so that batch replays under the same epoch. */
   private def feed[T: Encoder](batches: Seq[Seq[T]], crashAt: Int,
-                               crash: Option[CrashFs.Trigger])
+                               crash: Option[CrashFs.Trigger],
+                               failure: String = "crashfs: crash")
                               (start: Dataset[T] => StreamingQuery): Unit = {
     val mem = MemoryStream[T]
     var q = start(mem.toDS())
@@ -104,7 +122,7 @@ class StateDirSpec extends SparkSpec {
         try {
           val e = intercept[StreamingQueryException](q.processAllAvailable())
           assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(c => String.valueOf(c.getMessage).startsWith("crashfs: crash")), e)
+            .exists(c => String.valueOf(c.getMessage).startsWith(failure)), e)
         } finally { q.stop(); CrashFs.reset() }
         q = start(mem.toDS())
       }
@@ -114,30 +132,133 @@ class StateDirSpec extends SparkSpec {
 
   test("incremental SCD2 restarted from every torn snapshot swap equals a run with no crash") {
     import StreamingOps.ChangeEvent
+    // batch 0 closes an interval of key 1, so its history append has rows
     val batches = Seq(
-      Seq(ChangeEvent(1L, 10L, 100L, 1.0), ChangeEvent(2L, 20L, 100L, 2.0)),
+      Seq(ChangeEvent(1L, 9L, 50L, 0.5), ChangeEvent(1L, 10L, 100L, 1.0),
+        ChangeEvent(2L, 20L, 100L, 2.0)),
       Seq(ChangeEvent(1L, 11L, 200L, 1.5), ChangeEvent(3L, 30L, 50L, 3.0),
         ChangeEvent(2L, 20L, 100L, 2.0)),
       Seq(ChangeEvent(1L, 12L, 300L, 1.7), ChangeEvent(2L, 21L, 400L, 2.5),
         ChangeEvent(3L, 31L, 60L, 3.5)))
-    def run(crash: Option[CrashFs.Trigger], dir: String): (Seq[String], Seq[String]) = {
-      feed(batches, crashAt = 1, crash) { ds =>
+    /** The run with `crash` armed in batch `crashAt`, failing it with
+      * `failure`; `through` (current or history) is the output written
+      * through `crashfs:`, where it fires. */
+    def run(crash: Option[CrashFs.Trigger], dir: String, crashAt: Int = 1,
+            through: String = "current", failure: String = "crashfs: crash")
+        : (Seq[String], Seq[String]) = {
+      def uri(name: String) = if (name == through) s"crashfs://$dir/$name" else s"$dir/$name"
+      feed(batches, crashAt, crash, failure) { ds =>
         StreamingOps.incrementalScd2(ds.toDF("user_id", "event_id", "ts", "value"), "user_id",
-          s"crashfs://$dir/current", s"$dir/history", s"$dir/ckpt")
+          uri("current"), uri("history"), s"$dir/ckpt")
       }
       (rows(spark.read.parquet(s"$dir/current")), rows(spark.read.parquet(s"$dir/history")))
     }
     val (current, history) = run(None, tmp("scd2_ref_"))
-    assert(current.size == 3 && history.size == 4)
-    tornStates.foreach { state =>
-      val dir = tmp("scd2_torn_")
-      val (c, h) = run(Some(torn(state, s"$dir/current")), dir)
+    assert(current.size == 3 && history.size == 5)
+    // "staged only" is the crash after the history commit, before the install
+    val crashes =
+      tornStates.map(state => state -> ((dir: String) => run(Some(torn(state, s"$dir/current")),
+        dir))) :+
+        ("staged write" -> ((dir: String) => run(Some(inJobCommit(s"$dir/.current.staged")),
+          dir))) :+
+        // the first snapshot is staged in full while the first history
+        // append fails (its job commit is aborted, so none of its rows is
+        // left to a later commit): the replay must not find it installed
+        ("history append of batch 0" -> ((dir: String) => run(
+          Some(inJobCommit(s"$dir/history", crash = false)), dir, crashAt = 0,
+          through = "history", failure = "Failed to rename")))
+    crashes.foreach { case (state, crashed) =>
+      val (c, h) = crashed(tmp("scd2_torn_"))
       assert(c == current, state)
-      // history is appended before the swap: a crash before the staged
-      // copy is installed replays that append (at-least-once history)
-      if (state == "staged only") assert(h.distinct == history, state)
-      else assert(h == history, state)
+      // the snapshot is installed after the history append commits: a crash
+      // before the install replays that append (at-least-once history)
+      if (state.startsWith("staged") || state.startsWith("history")) {
+        assert(h.distinct == history, state)
+      } else assert(h == history, state)
     }
+  }
+
+  test("incremental exact dedup restarted after a crash in its staged ledger append loses no " +
+      "document and never holds a fingerprint without its corpus row") {
+    // a part file per shuffle partition, so the install moves several
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    // 10 new texts in each of the first two batches; the third repeats the first
+    val batches = Seq(0, 1, 2).map(b =>
+      (0 until 12).map(i => (b * 100L + i, s"doc ${i % 10} of ${b % 2}")))
+    def run(crash: String => Option[CrashFs.Trigger], dir: String)
+        : (Seq[String], Seq[String]) = {
+      feed(batches, crashAt = 1, crash(dir)) { ds =>
+        StreamingOps.incrementalExactDedup(ds.toDF("doc_id", "text"), "doc_id", "text",
+          s"$dir/corpus", s"crashfs://$dir/ledger", s"$dir/ckpt")
+      }
+      val corpus = spark.read.parquet(s"$dir/corpus")
+      val ledger = spark.read.parquet(s"$dir/ledger")
+      val orphans = ledger.join(
+        corpus.select(ops.TextOps.fingerprint(col("text")).as("fp")), Seq("fp"), "left_anti")
+      assert(orphans.isEmpty, s"ledger fingerprints without a corpus row: ${rows(orphans)}")
+      (rows(corpus), rows(ledger))
+    }
+    /** The `n`-th rename that moves a staged fingerprint file into the ledger. */
+    def installMove(n: Int)(dir: String): CrashFs.Trigger = {
+      var seen = 0
+      CrashFs.Trigger((op, src, dst) => op == "rename" &&
+        src.startsWith(s"$dir/.ledger.append/part-") && dst.startsWith(s"$dir/ledger/") &&
+        { seen += 1; seen == n }, crash = true)
+    }
+    try {
+      val (corpus, ledger) = run(_ => None, tmp("xdedup_ref_"))
+      assert(corpus.size == 20 && ledger.size == 20)
+      Seq[(String, String => CrashFs.Trigger)](
+        "staged ledger write" -> (dir => inJobCommit(s"$dir/.ledger.append")),
+        "before the ledger install" -> installMove(1),
+        "partway through the install" -> installMove(2),
+        "before the staged append is deleted" -> (dir => CrashFs.Trigger(
+          (op, p, _) => op == "delete" && p == s"$dir/.ledger.append", crash = true))
+      ).foreach { case (window, trigger) =>
+        val (c, l) = run(dir => Some(trigger(dir)), tmp("xdedup_window_"))
+        // the replay may append the batch's documents again, never lose one
+        assert(c.distinct == corpus, window)
+        assert(l == ledger, window)
+      }
+    } finally was match {
+      case Some(v) => spark.conf.set(coalesce, v)
+      case None => spark.conf.unset(coalesce)
+    }
+  }
+
+  test("read and swap delete a leftover staged append and keep the live rows") {
+    val schema = Seq((0L, "")).toDF("id", "v").schema
+    Seq[String => Unit](
+      live => assert(StateDir.read(spark, live, schema).map(rows).contains(Seq("[1,x]"))),
+      live => StateDir.swap(Seq((1L, "x")).toDF("id", "v"), live)
+    ).foreach { repairing =>
+      val dir = tmp("append_left_")
+      val live = s"$dir/state"
+      Seq((1L, "x")).toDF("id", "v").write.parquet(live)
+      Seq((2L, "y")).toDF("id", "v").write.parquet(s"$dir/.state.append")
+      repairing(live)
+      assert(!new java.io.File(s"$dir/.state.append").exists())
+      assert(rows(spark.read.parquet(live)) == Seq("[1,x]"))
+    }
+  }
+
+  test("afterCommit waits for the staging write when the first write fails on an " +
+      "interrupted thread, and installs nothing") {
+    val dir = tmp("after_commit_")
+    val e = intercept[IllegalStateException](
+      StateDir.afterCommit(spark.range(0, 1000, 1, 4).toDF("id"), s"$dir/state",
+          append = false) {
+        // what a query's stop() does to the batch thread
+        Thread.currentThread().interrupt()
+        throw new IllegalStateException("first write failed")
+      })
+    assert(Thread.interrupted(), "the interrupt flag stays set")
+    assert(e.getMessage == "first write failed")
+    assert(new java.io.File(s"$dir/.state.staged/_SUCCESS").exists(),
+      "the staging write ended before the call threw")
+    assert(!new java.io.File(s"$dir/state").exists())
   }
 
   test("drift monitor restarted from every torn ledger compaction equals a run with no crash") {

@@ -1722,41 +1722,181 @@ class StreamingSpec extends SparkSpec {
     assert(maintained.groupBy("user_id", "version").count().where(col("count") > 1).isEmpty)
   }
 
+  /** Per batch after the first (which creates the state), for the query
+    * `start(dir)` builds: its job count, and whether the job writing its
+    * second output (the plan names `staged`) started before the job
+    * writing its first output (to `$dir/$first`, which `start` must write
+    * through `crashfs:`) ended, in listener-bus order. While a batch runs,
+    * each task commit of the first write waits until the staging job has
+    * started (10 s at most), so a staging write that runs alongside the
+    * first always overlaps it and one that runs after it never does. */
+  private def writeJobsPerBatch(dir: String, first: String, staged: String,
+                                feed: Seq[() => Unit])
+                               (start: String => org.apache.spark.sql.streaming.StreamingQuery)
+      : Seq[(Int, Boolean)] = {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.GraftPlanBridge
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    // ("start" | "end", "first" | "staged" | "") of each job event
+    val events = new ConcurrentLinkedQueue[(String, String)]
+    val stagingStarted = new AtomicReference(new CountDownLatch(0))
+    val holds = new AtomicInteger
+    val listener = new SparkListener {
+      // one thread delivers every event, in the order they were posted
+      private val plans = scala.collection.mutable.Map.empty[String, String]
+      private val outputs = scala.collection.mutable.Map.empty[Int, String]
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          plans(x.executionId.toString) = x.physicalPlanDescription
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val plan = Option(e.properties.getProperty("spark.sql.execution.id"))
+          .flatMap(plans.get).getOrElse("")
+        val out = if (plan.contains(staged)) "staged"
+          else if (plan.contains(s"$dir/$first")) "first" else ""
+        outputs(e.jobId) = out
+        events.add("start" -> out)
+        if (out == "staged") stagingStarted.get.countDown()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        events.add("end" -> outputs.getOrElse(e.jobId, ""))
+    }
+    val q = start(dir)
+    sc.addSparkListener(listener)
+    try {
+      feed.head(); q.processAllAvailable()
+      CrashFs.hold = (src, dst) =>
+        // a task commit: the attempt directory moves within `_temporary`
+        if (src.startsWith(s"$dir/$first/_temporary/") && dst.contains("/_temporary/")) {
+          holds.incrementAndGet()
+          stagingStarted.get.await(10, TimeUnit.SECONDS): Unit
+        }
+      feed.tail.map { add =>
+        GraftPlanBridge.drainListeners(sc)
+        events.clear(); holds.set(0); stagingStarted.set(new CountDownLatch(1))
+        add(); q.processAllAvailable()
+        GraftPlanBridge.drainListeners(sc)
+        assert(holds.get > 0, "no task commit of the first write was held")
+        val log = events.asScala.toSeq
+        val overlap = log.indexOf("start" -> "staged") match {
+          case -1 => false
+          case s => log.indexOf("end" -> "first") > s
+        }
+        (log.count(_._1 == "start"), overlap)
+      }
+    } finally { CrashFs.hold = (_, _) => (); q.stop(); sc.removeSparkListener(listener) }
+  }
+
+  private def changeBatches(changes: MemoryStream[StreamingOps.ChangeEvent], n: Int) =
+    (0 until n).map { b =>
+      () => changes.addData((0 until 20).map(i =>
+        StreamingOps.ChangeEvent(i % 7L, b * 100L + i, b * 1000L + i, i.toDouble))): Unit
+    }
+
   test("CDC appliers stay within their per-batch Spark job budget") {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.GraftPlanBridge
-    val sc = spark.sparkContext
-    val jobs = new graft.tools.Probe.Jobs
-    /** Jobs of each batch after the first (which creates the state). */
-    def perBatch(q: org.apache.spark.sql.streaming.StreamingQuery,
-                 feed: Seq[() => Unit]): Seq[Int] = {
-      try {
-        feed.head(); q.processAllAvailable()
-        feed.tail.map { add =>
-          GraftPlanBridge.drainListeners(sc)
-          jobs.reset()
-          val t0 = System.currentTimeMillis()
-          add(); q.processAllAvailable()
-          val t1 = System.currentTimeMillis()
-          GraftPlanBridge.drainListeners(sc)
-          jobs.run(t0, t1).jobs
-        }
-      } finally q.stop()
+    val changes = MemoryStream[StreamingOps.ChangeEvent]
+    val scd2 = writeJobsPerBatch(tmpDir("scd2_jobs_"), "history", ".current.staged",
+        changeBatches(changes, 4)) { dir =>
+      StreamingOps.incrementalScd2(changes.toDS().toDF("user_id", "event_id", "ts", "value"),
+        "user_id", s"$dir/current", s"crashfs://$dir/history", s"$dir/ckpt")
     }
-    sc.addSparkListener(jobs)
-    try {
-      val changes = MemoryStream[StreamingOps.ChangeEvent]
-      val scd2 = perBatch(scd2Query(changes, tmpDir("scd2_jobs_")), (0 until 4).map { b =>
-        () => changes.addData((0 until 20).map(i =>
-          StreamingOps.ChangeEvent(i % 7L, b * 100L + i, b * 1000L + i, i.toDouble)))
-      })
-      val docs = MemoryStream[(Long, String)]
-      val dedup = perBatch(exactDedupQuery(docs, tmpDir("xdedup_jobs_")), (0 until 4).map { b =>
-        () => docs.addData((0 until 20).map(i => (b * 100L + i, s"text ${i % 9}")))
-      })
-      info(s"jobs per batch: scd2 $scd2, exact dedup $dedup")
-      assert(scd2.forall(_ <= 4), s"incrementalScd2 jobs per batch: $scd2")
-      assert(dedup.forall(_ <= 5), s"incrementalExactDedup jobs per batch: $dedup")
-    } finally sc.removeSparkListener(jobs)
+    val docs = MemoryStream[(Long, String)]
+    val dedup = writeJobsPerBatch(tmpDir("xdedup_jobs_"), "corpus", ".ledger.append",
+        (0 until 4).map { b =>
+          () => docs.addData((0 until 20).map(i => (b * 100L + i, s"text ${i % 9}"))): Unit
+        }) { dir =>
+      StreamingOps.incrementalExactDedup(docs.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        s"crashfs://$dir/corpus", s"$dir/ledger", s"$dir/ckpt")
+    }
+    info(s"(jobs, write jobs overlap) per batch: scd2 $scd2, exact dedup $dedup")
+    // the stages' shuffle maps and broadcasts, then the two writes; no
+    // job of its own fills the batch result's cache
+    assert(scd2.forall(_._1 <= 3), s"incrementalScd2 jobs per batch: $scd2")
+    assert(dedup.forall(_._1 <= 4), s"incrementalExactDedup jobs per batch: $dedup")
+    // the second output is staged while the first is written
+    assert(scd2.forall(_._2), s"incrementalScd2 write jobs overlap per batch: $scd2")
+    assert(dedup.forall(_._2), s"incrementalExactDedup write jobs overlap per batch: $dedup")
+  }
+
+  // ---- the persisted batch result and the staged write of the appliers ----
+
+  test("persisted: the first action stores the rows, and a lost block is recomputed " +
+      "from the lineage") {
+    val sc = spark.sparkContext
+    val df = spark.range(0, 2000, 1, 4).groupBy((col("id") % 13).as("k"))
+      .agg(sum(col("id")).as("s"))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).toSeq.sorted
+    val expected = rows(df)
+    val before = sc.getPersistentRDDs.keySet
+    StreamingOps.persisted(df) { p =>
+      assert(rows(p) == expected)
+      val ids = sc.getPersistentRDDs.keySet -- before
+      assert(ids.size == 1, ids)
+      assert(sc.getRDDStorageInfo.exists(i => i.id == ids.head && i.numCachedPartitions > 0),
+        "the first action stored the rows")
+      // drop every block: a local checkpoint would now fail the action
+      sc.getPersistentRDDs(ids.head).unpersist(blocking = true)
+      assert(rows(p) == expected)
+    }
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("CDC appliers release their persisted batch results every batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val changes = MemoryStream[StreamingOps.ChangeEvent]
+    val docs = MemoryStream[(Long, String)]
+    val before = sc.getPersistentRDDs.size
+    val scd2 = scd2Query(changes, tmpDir("scd2_release_"))
+    val dedup = exactDedupQuery(docs, tmpDir("xdedup_release_"))
+    try changeBatches(changes, 10).zipWithIndex.foreach { case (add, b) =>
+      add(); docs.addData((0 until 20).map(i => (b * 100L + i, s"text ${i % 9} $b")): _*)
+      scd2.processAllAvailable(); dedup.processAllAvailable()
+      assert(sc.getPersistentRDDs.size <= before, s"batch $b: ${sc.getPersistentRDDs}")
+    } finally { scd2.stop(); dedup.stop() }
+  }
+
+  test("the staged write runs under the query's job group and job tags") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val tag = "graft-staging-test"
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]
+    // (SQL execution id, job group, job tags) of every job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[String])]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          plans.put(x.executionId.toString, x.physicalPlanDescription): Unit
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.sql.execution.id"),
+          e.properties.getProperty("spark.jobGroup.id"),
+          Option(e.properties.getProperty("spark.job.tags")).toSeq.flatMap(_.split(",")))): Unit
+    }
+    val changes = MemoryStream[StreamingOps.ChangeEvent]
+    sc.addJobTag(tag)
+    // the query thread takes this thread's job tags when it starts
+    val q = try scd2Query(changes, tmpDir("scd2_tags_")) finally sc.removeJobTag(tag)
+    sc.addSparkListener(listener)
+    try changeBatches(changes, 3).foreach { add => add(); q.processAllAvailable() }
+    finally { q.stop(); sc.removeSparkListener(listener) }
+    org.apache.spark.sql.GraftPlanBridge.drainListeners(sc)
+    // the jobs of the writes to the staged snapshot, one per batch
+    val staged = jobs.asScala.toSeq.filter(j =>
+      Option(plans.get(j._1)).exists(_.contains(".current.staged")))
+    assert(staged.size == 3, jobs.asScala.mkString("\n"))
+    assert(staged.forall(j => j._2 == q.runId.toString && j._3.contains(tag)), staged)
   }
 }
